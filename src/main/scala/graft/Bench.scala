@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -17,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // 5 runs (was 3): per-run timings show heavy-tailed multi-second
     // outliers — NOT GC (zero full collections, ≤15 ms pauses in the
     // -Xlog:gc trace), time-clustered across adjacent queries and able
@@ -28,20 +26,8 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
     // Dev-only AQE toggle for measuring adaptive-execution overhead at
     // bench scale (the driver never sets it).
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-      // 80 queries x several WSCG fragments each blows through the
-      // default 100-entry generated-class cache, so pass-interleaved
-      // runs would re-janino-compile (and re-JIT) every fragment every
-      // pass. Static conf: must be set before the first codegen.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toBoolean
+    val spark = LocalSession(cpus, aqe)
     spark.sparkContext.setLogLevel("WARN")
     // The per-query RDD sweep below WARNs once per localCheckpointed
     // RDD ("lineage has been truncated...cannot be recomputed") —
@@ -140,10 +126,17 @@ object Bench {
       s"short bench keys collide: ${shortKeys.diff(shortKeys.distinct).distinct.mkString(",")}")
     val entries = shortKeys.zip(results.map(_._2))
     val total = results.map(_._2).filter(_ >= 0).sum
+    // A failed query (-1) is left out of the total and sorts last in the
+    // slowest-first map below, so without this list a throwing query
+    // would read as a faster bench; tools/check_bench_tail.py fails a
+    // run whose list is missing or non-empty.
+    val failed = entries.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
     val fullQs = entries.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     println(s"""bench-full {"metric":"total","value":${f3(total)},"unit":"sec","runs":$runs,"queries":$fullQs,"sf":"$sfDir"}""")
-    val mapBudget = 1200 // chars for the queries map; line ≈ budget + 120
+    // chars for the queries map plus the failed list; line ≈ 1200 + 130
+    val mapBudget = 1200 - failed.length
     val bySlowest = entries.sortBy { case (_, v) => -v }
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
     val shown = scala.collection.mutable.ArrayBuffer[String]()
@@ -152,7 +145,7 @@ object Bench {
       if (used + e.length + 1 <= mapBudget) { shown += e; used += e.length + 1 }
     }
     val qs = shown.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","runs":$runs,"queries":$qs,"queries_shown":${shown.size},"queries_total":${entries.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","runs":$runs,"queries":$qs,"queries_shown":${shown.size},"queries_total":${entries.size},"failed":$failed,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -38,7 +38,7 @@ import graft.operators.{Apportion, AsofJoin, Bars, Bfs, BloomJoin, Bpe,
 object BenchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,4,16")
       .split(",").map(_.trim.toInt).toSeq
@@ -48,13 +48,7 @@ object BenchScale {
     // bare dir-exists (a killed run leaves a partial dir behind)
     val scratch = s"/tmp/graft_scale/${new java.io.File(sfDir).getName}"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- synthesize the k× fixtures (materialized so timings measure
@@ -75,14 +69,14 @@ object BenchScale {
             (if (c == 0) col("text")
              else regexp_replace(col("text"), "(\\S+)", "$1~c" + c)).as("text"))
         }.reduce(_.unionByName(_))
-          .repartition(cpus.toInt).write.mode("overwrite").parquet(dDir)
+          .repartition(cpus).write.mode("overwrite").parquet(dDir)
       }
       if (!new java.io.File(eDir, "_SUCCESS").exists()) {
         (0 until k).map { c =>
           emb.select((col("vec_id") + lit(c.toLong * 1000000L)).as("vec_id"),
             col("embedding"))
         }.reduce(_.unionByName(_))
-          .repartition(cpus.toInt).write.mode("overwrite").parquet(eDir)
+          .repartition(cpus).write.mode("overwrite").parquet(eDir)
       }
       val vDir = s"$scratch/k$k/events.parquet"
       if (!new java.io.File(vDir, "_SUCCESS").exists()) {
@@ -91,7 +85,7 @@ object BenchScale {
             col("ts"), (col("user_id") + lit(c.toLong * 10000000L)).as("user_id"),
             col("event_type"))
         }.reduce(_.unionByName(_))
-          .repartition(cpus.toInt).write.mode("overwrite").parquet(vDir)
+          .repartition(cpus).write.mode("overwrite").parquet(vDir)
       }
     }
 
@@ -1266,13 +1260,13 @@ object BenchScale {
       val ts = scales.map { k =>
         partsPerK.foreach { p =>
           spark.conf.set("spark.sql.shuffle.partitions",
-            math.max(cpus.toInt, p * k).toString)
+            math.max(cpus, p * k).toString)
         }
         k -> median((1 to runs).map { _ =>
           val t = time(fn(k)); Caches.releaseAll(spark); t
         })
       }
-      partsPerK.foreach(_ => spark.conf.set("spark.sql.shuffle.partitions", cpus))
+      partsPerK.foreach(_ => spark.conf.set("spark.sql.shuffle.partitions", cpus.toString))
       val a = alpha(ts.map(_._1), ts.map(_._2))
       if (a > worst._2) worst = (name, a)
       val tsJson = ts.map { case (k, t) => s""""k$k":${fmt(t, 3)}""" }.mkString(",")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of the named
   * queries (or a default headline set) so pushdown / broadcast / WSCG can
   * be reviewed. Usage: runMain graft.Explain [sfDir] [query...]
@@ -14,12 +12,7 @@ object Explain {
       else Seq("q01_agg_pricing", "q07_join_chain5", "q08_join_self",
         "q14_sort_topk", "q17_pred_range", "q25_optimade_part",
         "q37_dedup_minhash", "q39_embed_topk", "q44_events_window")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n=================== $n ===================")

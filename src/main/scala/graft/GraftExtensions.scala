@@ -16,12 +16,13 @@ import graft.functions.HillFormulaExpr
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * Injected functions land in the session's catalog at build time (no
-  * per-query `createOrReplaceTempFunction` needed), so plain SQL texts
-  * like `SELECT hill_formula(f) FROM t` resolve on every session built
-  * with the extension. The in-library Column-API path
-  * (`GraftFunctions.hill_formula`) still self-registers lazily for
-  * sessions without it — the two compose.
+  * Injected functions land in the session's catalog at build time, so
+  * plain SQL texts like `SELECT hill_formula(f) FROM t` resolve on every
+  * session built with the extension. SQL names are the only thing the
+  * catalog is for: the Column API (`GraftFunctions.hill_formula`) builds
+  * the expression directly through `ExpressionBridge` and needs no
+  * registration. Sessions built without the extension get the same SQL
+  * name from `GraftFunctions.registerAll`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

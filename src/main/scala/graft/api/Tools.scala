@@ -37,8 +37,7 @@ object Tools {
                      failures: Seq[(String, String)] = Seq.empty,
                      writeCif: Boolean = false,
                      nResults: Int = FetchResult.MaxReturnedStructs): ToolOutput = {
-    val truncated = df.limit(FetchResult.MaxReturnedStructs)
-    val rows = truncated.collect()
+    val rows = df.limit(FetchResult.MaxReturnedStructs).collect()
     val cleaned = rows.map { r =>
       r.schema.fieldNames.map(f => f -> r.getAs[Any](f)).toMap
     }.toSeq
@@ -46,9 +45,7 @@ object Tools {
       case Some(d) =>
         val p = Paths.get(d)
         Files.createDirectories(p)
-        val (fs, ws) =
-          if (writeCif) CifWriter.writeStructures(truncated, d)
-          else CifWriter.writeStructures(truncated, d, asCif = false)
+        val (fs, ws) = CifWriter.writeRows(rows.toSeq, d, asCif = writeCif)
         Manifest.write(p, filterDesc, stats, plan, fs, failures,
           format = if (writeCif) "cif" else "json",
           nResults = nResults, warnings = ws,

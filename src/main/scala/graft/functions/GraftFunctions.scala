@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Column-level API for the domain function library (SURVEY §2.7 F1-F13).
@@ -19,121 +20,40 @@ object GraftFunctions {
 
   // F2 — Hill canonicalization via the native codegen'd expression
   // (HillFormulaExpr); stays inside whole-stage codegen unlike a UDF.
-  // Spark 4's Column API no longer exposes catalyst Expressions directly,
-  // so the Column form resolves through the session function registry.
-  def hill_formula(c: Column): Column = {
-    ensureHillRegistered(SparkSession.active)
-    call_function("hill_formula", c)
-  }
-
-  // Register-once-per-session guards. createOrReplaceTempFunction is
-  // idempotent but each call after the first logs a "replaced a
-  // previously registered function" WARN — hundreds of them per bench
-  // run, polluting the only output channel the round driver tail-reads —
-  // and is registry churn on the query-construction hot path. Weak keys
-  // so dropped sessions (tests create many) don't accumulate.
-  private val hillRegistered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-  private val vectorRegistered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  // Guards mark the session registered only AFTER registration completes,
-  // under the map's monitor — a flag-before-action putIfAbsent would let a
-  // concurrent query-construction thread proceed to call_function before
-  // the name exists (check-then-act race; benign single-threaded, fatal
-  // for a parallel harness).
-  private def ensureHillRegistered(spark: SparkSession): Unit = {
-    if (hillRegistered.containsKey(spark)) return
-    hillRegistered.synchronized {
-      if (!hillRegistered.containsKey(spark)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "hill_formula", exprs => HillFormulaExpr(exprs.head), "scala_udf")
-        hillRegistered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
-  }
+  // Spark 4's Column API hides catalyst Expressions, so every native
+  // expression here reaches its Column through ExpressionBridge — no
+  // session registry lookup, so it works on any session.
+  def hill_formula(c: Column): Column = column(HillFormulaExpr(expression(c)))
 
   // Vector kernels (similarity/ANN hot path) — native one-pass codegen'd
   // expressions; see VectorExprs scaladoc for the bit-compatibility
   // contract with the composed higher-order-function forms.
-  def cosine_sim(a: Column, b: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("cosine_sim", a, b)
-  }
+  def cosine_sim(a: Column, b: Column): Column =
+    column(CosineSimExpr(expression(a), expression(b)))
 
-  def sign_bucket(vec: Column, planes: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("sign_bucket", vec, planes)
-  }
+  def sign_bucket(vec: Column, planes: Column): Column =
+    column(SignBucketExpr(expression(vec), expression(planes)))
 
-  def hamming_dist(a: Column, b: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("hamming_dist", a, b)
-  }
+  def hamming_dist(a: Column, b: Column): Column =
+    column(HammingDistExpr(expression(a), expression(b)))
 
-  def simhash_blocks(bits: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("simhash_blocks", bits)
-  }
+  def simhash_blocks(bits: Column): Column =
+    column(SimhashBlocksExpr(expression(bits)))
 
-  def stopword_hits(tokens: Column, set: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("stopword_hits", tokens, set)
-  }
+  def stopword_hits(tokens: Column, set: Column): Column =
+    column(StopwordHitsExpr(expression(tokens), expression(set)))
 
-  def lsh_bands(sig: Column, bands: Int, rowsPerBand: Int): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("lsh_bands", sig, lit(bands), lit(rowsPerBand))
-  }
+  def lsh_bands(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    column(LshBandsExpr(expression(sig), bands, rowsPerBand))
 
-  def sig_agree(a: Column, b: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("sig_agree", a, b)
-  }
+  def sig_agree(a: Column, b: Column): Column =
+    column(SigAgreeExpr(expression(a), expression(b)))
 
-  def int_dot(a: Column, b: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("int_dot", a, b)
-  }
+  def int_dot(a: Column, b: Column): Column =
+    column(IntDotExpr(expression(a), expression(b)))
 
-  def int_sqdist(a: Column, b: Column): Column = {
-    ensureVectorRegistered(SparkSession.active)
-    call_function("int_sqdist", a, b)
-  }
-
-  private def ensureVectorRegistered(spark: SparkSession): Unit = {
-    if (vectorRegistered.containsKey(spark)) return
-    vectorRegistered.synchronized {
-      if (vectorRegistered.containsKey(spark)) return
-      registerVectorKernels(spark)
-      vectorRegistered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
-  private def registerVectorKernels(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_bucket", exprs => SignBucketExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_dist", exprs => HammingDistExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_blocks", exprs => SimhashBlocksExpr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "stopword_hits", exprs => StopwordHitsExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bands", exprs => LshBandsExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_agree", exprs => SigAgreeExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_dot", exprs => IntDotExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_sqdist", exprs => IntSqdistExpr(exprs(0), exprs(1)), "scala_udf")
-  }
+  def int_sqdist(a: Column, b: Column): Column =
+    column(IntSqdistExpr(expression(a), expression(b)))
 
   // F4 — space-group number → short HM / unicode symbol via map literals
   private lazy val shortHMCol: Column =
@@ -166,7 +86,8 @@ object GraftFunctions {
   def registerAll(spark: SparkSession): Unit = {
     spark.udf.register("normalize_formula",
       (s: String) => if (s == null) null else Formulas.normalizeFormula(s))
-    ensureHillRegistered(spark)
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "hill_formula", exprs => HillFormulaExpr(exprs.head), "scala_udf")
     spark.udf.register("spg_short_hm",
       (n: Int) => SpaceGroups.fromNumber(n).orNull)
     spark.udf.register("spg_unicode",

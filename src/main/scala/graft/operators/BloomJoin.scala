@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.functions._
 
@@ -39,33 +40,12 @@ import org.apache.spark.sql.functions._
   */
 object BloomJoin {
 
-  // once-per-session registration guard — same pattern and reason as
-  // MisraGriesAgg (registry churn WARN-spams the driver's tail)
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  private def ensureRegistered(spark: SparkSession): Unit = {
-    if (registered.containsKey(spark)) return
-    registered.synchronized {
-      if (!registered.containsKey(spark)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "bloom_might_contain",
-          exprs => BloomFilterMightContain(exprs.head, exprs(1)),
-          "scala_udf")
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
-  }
-
   /** `might_contain(filterBytes, value)` — Spark's native codegen'd bloom
     * probe (the value side must be LongType). The filter literal is
     * foldable, so the expression deserializes the bloom once per task,
     * not per row. */
-  def mightContain(filterBytes: Array[Byte], value: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function("bloom_might_contain", lit(filterBytes), value)
-  }
+  def mightContain(filterBytes: Array[Byte], value: Column): Column =
+    column(BloomFilterMightContain(expression(lit(filterBytes)), expression(value)))
 
   /** Serialized bloom filter over `dim`'s long key column, built
     * distributed (one partial filter per partition, OR-merged on the

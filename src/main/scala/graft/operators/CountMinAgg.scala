@@ -2,12 +2,12 @@ package graft.operators
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** Aggregation-buffer form of the [[CountMin]] sketch — the same d×w
@@ -108,37 +108,8 @@ case class CountMinAgg(
 
 object CountMinAgg {
 
-  // once-per-(session, signature) registration guard — KmvAgg pattern
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
-
-  private def ensureRegistered(spark: SparkSession, w: Int,
-                               probes: Seq[Long]): String = {
-    // lossless probe encoding (QDigestAgg pattern): hashCode could collide
-    // between two distinct probe lists in one session and silently reuse
-    // the first registration, returning estimates for the wrong keys
-    val name = s"countmin_${w}_${probes.mkString("_").replace("-", "m")}"
-    val perSession = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-    }
-    perSession.synchronized {
-      if (!perSession.contains(name)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name,
-          exprs => CountMinAgg(exprs.head, w, probes).toAggregateExpression(),
-          "scala_udf")
-        perSession.add(name)
-      }
-    }
-    name
-  }
-
   /** Aggregate Column: struct(n, est[...]) — CMS point estimates of the
     * probe keys over a LONG key column. */
-  def countmin(key: Column, w: Int, probes: Seq[Long]): Column = {
-    val name = ensureRegistered(SparkSession.active, w, probes)
-    call_function(name, key)
-  }
+  def countmin(key: Column, w: Int, probes: Seq[Long]): Column =
+    column(CountMinAgg(expression(key), w, probes).toAggregateExpression())
 }

@@ -199,7 +199,6 @@ object GraphStats {
   private def witnessFrames(edges: DataFrame,
                             hubCap: Long): (DataFrame, DataFrame, DataFrame) = {
     require(hubCap >= 1 && hubCap < Int.MaxValue, s"hubCap out of range: $hubCap")
-    val spark = edges.sparkSession
     // normalized frame feeds the adjacency agg and the anti/edge-side
     // consumers — persist per the AQE ReuseExchange rule
     val e = edges.select(col("src").cast("long").as("src"),
@@ -211,8 +210,7 @@ object GraphStats {
     // (deg twice), and AQE re-runs the agg per consumer otherwise.
     val grouped = e.groupBy(col("src").as("m"))
       .agg(count(lit(1)).as("deg"),
-        TopKAgg.topKExpr(spark, (hubCap + 1).toInt,
-          col("dst"), col("dst")).as("_tk"))
+        TopKAgg.topKExpr((hubCap + 1).toInt, col("dst"), col("dst")).as("_tk"))
       .persist()
     val deg = grouped.select(col("m"), col("deg"))
     val pairs = grouped.filter(col("deg") <= hubCap)

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Aggregation-buffer form of the [[Hll]] register sketch: one 2^p-byte
@@ -79,32 +79,8 @@ case class HllAgg(
 
 object HllAgg {
 
-  // once-per-(session, p) registration guard — same pattern and reason
-  // as KmvAgg (registry churn WARN-spams the driver's tail)
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[Integer]]())
-
-  private def ensureRegistered(spark: SparkSession, p: Int): Unit = {
-    val perSession = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]())
-    }
-    perSession.synchronized {
-      if (!perSession.contains(p)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          s"hll_registers_$p",
-          exprs => HllAgg(exprs.head, p).toAggregateExpression(),
-          "scala_udf")
-        perSession.add(p)
-      }
-    }
-  }
-
   /** Aggregate Column: the 2^p-long register vector over a LONG key
     * column (cast upstream). Bit-identical to [[Hll.registers]]. */
-  def hll_registers(key: Column, p: Int): Column = {
-    ensureRegistered(SparkSession.active, p)
-    call_function(s"hll_registers_$p", key)
-  }
+  def hll_registers(key: Column, p: Int): Column =
+    column(HllAgg(expression(key), p).toAggregateExpression())
 }

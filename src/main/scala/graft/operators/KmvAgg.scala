@@ -3,11 +3,11 @@ package graft.operators
 import java.nio.ByteBuffer
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Custom Catalyst aggregate form of the [[Kmv]] k-minimum-values
@@ -102,32 +102,8 @@ case class KmvAgg(
 
 object KmvAgg {
 
-  // once-per-(session, k) registration guard — same pattern and reason
-  // as MisraGriesAgg (registry churn WARN-spams the driver's tail)
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[Integer]]())
-
-  private def ensureRegistered(spark: SparkSession, k: Int): Unit = {
-    val perSession = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]())
-    }
-    perSession.synchronized {
-      if (!perSession.contains(k)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          s"kmv_sketch_$k",
-          exprs => KmvAgg(exprs.head, k).toAggregateExpression(),
-          "scala_udf")
-        perSession.add(k)
-      }
-    }
-  }
-
   /** Aggregate Column: struct(k_used, kth_hash) over a LONG key column
     * (cast upstream). Bit-identical to [[Kmv.sketch]] per group. */
-  def kmv_sketch(key: Column, k: Int): Column = {
-    ensureRegistered(SparkSession.active, k)
-    call_function(s"kmv_sketch_$k", key)
-  }
+  def kmv_sketch(key: Column, k: Int): Column =
+    column(KmvAgg(expression(key), k).toAggregateExpression())
 }

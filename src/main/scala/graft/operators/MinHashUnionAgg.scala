@@ -1,7 +1,8 @@
 package graft.operators
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -87,37 +88,10 @@ case class MinHashUnionAgg(
 
 object MinHashUnionAgg {
 
-  // Once-per-(session, numHashes) guard: repeat createOrReplaceTempFunction
-  // calls WARN-spam the output channel the round driver tail-reads (see
-  // GraftFunctions for the same pattern). Weak session keys.
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[Integer]]())
-
-  private def ensureRegistered(spark: SparkSession, numHashes: Int): Unit = {
-    val perSession = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]())
-    }
-    // register BEFORE marking, under the set's monitor: add-then-register
-    // would let a concurrent thread resolve the name before it exists
-    perSession.synchronized {
-      if (!perSession.contains(numHashes)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          s"minhash_union_$numHashes",
-          exprs => MinHashUnionAgg(exprs.head, numHashes).toAggregateExpression(),
-          "scala_udf")
-        perSession.add(numHashes)
-      }
-    }
-  }
-
   /** Aggregate Column: group-level union signature from row signatures
     * (produce row signatures with [[Dedup.minhashSigUdf]]). */
-  def minhash_union(sig: Column, numHashes: Int = 64): Column = {
-    ensureRegistered(SparkSession.active, numHashes)
-    call_function(s"minhash_union_$numHashes", sig)
-  }
+  def minhash_union(sig: Column, numHashes: Int = 64): Column =
+    column(MinHashUnionAgg(expression(sig), numHashes).toAggregateExpression())
 
   /** Estimated Jaccard between two union signatures: fraction of equal
     * components. */

@@ -4,12 +4,12 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -138,34 +138,8 @@ case class MisraGriesAgg(
 
 object MisraGriesAgg {
 
-  // once-per-(session, k) registration guard — same pattern and reason
-  // as MinHashUnionAgg (registry churn WARN-spams the driver's tail)
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[Integer]]())
-
-  private def ensureRegistered(spark: SparkSession, k: Int): Unit = {
-    val perSession = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]())
-    }
-    // register BEFORE marking, under the set's monitor (see
-    // MinHashUnionAgg.ensureRegistered for the race this avoids)
-    perSession.synchronized {
-      if (!perSession.contains(k)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          s"misra_gries_$k",
-          exprs => MisraGriesAgg(exprs.head, k).toAggregateExpression(),
-          "scala_udf")
-        perSession.add(k)
-      }
-    }
-  }
-
   /** Aggregate Column: map<token, estimated count> with at most `k`
     * entries. */
-  def misra_gries(token: Column, k: Int): Column = {
-    ensureRegistered(SparkSession.active, k)
-    call_function(s"misra_gries_$k", token)
-  }
+  def misra_gries(token: Column, k: Int): Column =
+    column(MisraGriesAgg(expression(token), k).toAggregateExpression())
 }

@@ -3,12 +3,12 @@ package graft.operators
 import java.nio.ByteBuffer
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** Mergeable quantile sketch — a deterministic q-digest (Shrivastava,
@@ -194,34 +194,8 @@ object QDigestAgg {
     }
   }
 
-  // once-per-(session, signature) registration guard — KmvAgg pattern
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
-
-  private def ensureRegistered(spark: SparkSession, k: Int, levels: Int,
-                               probes: Seq[Int]): String = {
-    val name = s"qdigest_${k}_${levels}_${probes.mkString("_")}"
-    val perSession = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-    }
-    perSession.synchronized {
-      if (!perSession.contains(name)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name,
-          exprs => QDigestAgg(exprs.head, k, levels, probes).toAggregateExpression(),
-          "scala_udf")
-        perSession.add(name)
-      }
-    }
-    name
-  }
-
   /** Aggregate Column: struct(n, qs[...]) of per-mille quantiles over a
     * LONG value column in [0, 2^levels). */
-  def qdigest(value: Column, k: Int, levels: Int, probesPerMille: Seq[Int]): Column = {
-    val name = ensureRegistered(SparkSession.active, k, levels, probesPerMille)
-    call_function(name, value)
-  }
+  def qdigest(value: Column, k: Int, levels: Int, probesPerMille: Seq[Int]): Column =
+    column(QDigestAgg(expression(value), k, levels, probesPerMille).toAggregateExpression())
 }

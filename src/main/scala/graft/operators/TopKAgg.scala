@@ -3,7 +3,8 @@ package graft.operators
 import java.nio.ByteBuffer
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -110,50 +111,23 @@ case class TopKAgg(
 
 object TopKAgg {
 
-  // once-per-(session, k) registration guard — same pattern and reason
-  // as MisraGriesAgg (registry churn WARN-spams the driver's tail)
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[Integer]]())
-
-  private def ensureRegistered(spark: SparkSession, k: Int): Unit = {
-    val perSession = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]())
-    }
-    perSession.synchronized {
-      if (!perSession.contains(k)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          s"graft_topk_$k",
-          exprs => TopKAgg(exprs(0), exprs(1), k).toAggregateExpression(),
-          "scala_udf")
-        perSession.add(k)
-      }
-    }
-  }
-
-  /** The raw bounded top-k aggregate as a Column (registers the
-    * session function on first use): array&lt;struct&lt;v,id&gt;&gt; of the top
-    * `k` (value DESC, id ASC) pairs per group. The k-bounded buffer is
+  /** The raw bounded top-k aggregate as a Column:
+    * array&lt;struct&lt;v,id&gt;&gt; of the top `k` (value DESC, id ASC)
+    * pairs per group. The k-bounded buffer is
     * what makes it the SKEW-SAFE capped neighbor collector for the
     * graph operators: a hub key's state never exceeds k entries on any
     * map partition or in the final merge, where collect_list would
     * materialize the full neighborhood in one task (guide §2.5). */
-  def topKExpr(spark: SparkSession, k: Int, value: Column,
-               id: Column): Column = {
-    ensureRegistered(spark, k)
-    call_function(s"graft_topk_$k", value, id)
-  }
+  def topKExpr(k: Int, value: Column, id: Column): Column =
+    column(TopKAgg(expression(value), expression(id), k).toAggregateExpression())
 
   /** Top `k` rows per `groupCol` by (`valueCol` DESC, `idCol` ASC):
     * output (groupCol, rnk 1-based, idCol, valueCol). Both value and id
     * must be long-castable. */
   def topKPerGroup(df: DataFrame, groupCol: String, valueCol: String,
                    idCol: String, k: Int): DataFrame = {
-    ensureRegistered(df.sparkSession, k)
     df.groupBy(col(groupCol))
-      .agg(call_function(s"graft_topk_$k",
-        col(valueCol).cast("long"), col(idCol).cast("long")).as("_tk"))
+      .agg(topKExpr(k, col(valueCol).cast("long"), col(idCol).cast("long")).as("_tk"))
       .select(col(groupCol), posexplode(col("_tk")).as(Seq("_pos", "_e")))
       .select(col(groupCol), (col("_pos") + 1).cast("long").as("rnk"),
         col("_e.id").as(idCol), col("_e.v").as(valueCol))

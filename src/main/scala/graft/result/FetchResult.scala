@@ -210,12 +210,22 @@ object CifWriter {
                       idCol: String = "id", latticeCol: String = "lattice_vectors",
                       speciesCol: String = "species_at_sites",
                       positionsCol: String = "cartesian_site_positions",
-                      asCif: Boolean = true): (Seq[String], Seq[String]) = {
+                      asCif: Boolean = true): (Seq[String], Seq[String]) =
+    // ≤ MaxReturnedStructs rows by contract
+    writeRows(df.collect().toSeq, outDir, idCol, latticeCol, speciesCol,
+      positionsCol, asCif)
+
+  /** [[writeStructures]] over rows the caller has already collected, so a
+    * tool call that returns the rows and writes them runs its query once. */
+  def writeRows(rows: Seq[Row], outDir: String,
+                idCol: String = "id", latticeCol: String = "lattice_vectors",
+                speciesCol: String = "species_at_sites",
+                positionsCol: String = "cartesian_site_positions",
+                asCif: Boolean = true): (Seq[String], Seq[String]) = {
     val dir = Paths.get(outDir)
     Files.createDirectories(dir)
     val files = Seq.newBuilder[String]
     val warnings = Seq.newBuilder[String]
-    val rows = df.collect() // ≤ MaxReturnedStructs rows by contract
     rows.foreach { row =>
       val id = row.getAs[Any](idCol).toString
       try {

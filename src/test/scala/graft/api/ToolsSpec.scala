@@ -73,6 +73,38 @@ class ToolsSpec extends AnyFunSuite {
     assert(out.result.cleanedStructures.head("id") == 1L)
   }
 
+  test("writing files does not run the tool's query a second time") {
+    import spark.implicits._
+    // repartitioned so the query runs as Spark jobs, not as a local
+    // relation collected without one
+    val crystals = Seq(
+      (1L, "Fe2O3", -40.2, Timestamp.valueOf("2024-03-01 00:00:00")),
+      (2L, "NaCl", -7.1, Timestamp.valueOf("2023-06-01 00:00:00")))
+      .toDF("id", "formula", "energy", "submission_time").repartition(2)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(outputDir: Option[String]): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val out = Tools.fetchOpenlamStructures(spark, crystals,
+        formula = Some("Fe2O3"), outputDir = outputDir)
+      assert(out.result.code == 0 && out.result.nFound == 1)
+      assert(out.files.size == (if (outputDir.isDefined) 1 else 0))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val without = jobsOf(None)
+      val withFiles = jobsOf(Some(Files.createTempDirectory("tools-jobs").toString))
+      assert(without > 0)
+      assert(withFiles == without, s"with outputDir: $withFiles jobs, without: $without")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("envelope codes: -9999 on empty success, -1 on query error") {
     import spark.implicits._
     val crystals = Seq(

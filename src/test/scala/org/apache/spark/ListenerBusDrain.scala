@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Blocks until the listener bus has delivered every queued event, so a
+  * test listener's counts are complete. `listenerBus` is package-private
+  * to Spark. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

@@ -41,9 +41,15 @@ if len(parsed) != 1:
     sys.exit(1)
 
 obj = parsed[0]
-missing = [k for k in ("metric", "value", "unit", "queries", "sf") if k not in obj]
+missing = [k for k in ("metric", "value", "unit", "queries", "failed", "sf") if k not in obj]
 if missing:
     print(f"FAIL: bench JSON missing keys {missing}: {obj}")
+    sys.exit(1)
+
+# A query that throws is left out of the total and sorted out of the
+# shown map, so only this list can turn a broken query into a red gate.
+if obj["failed"]:
+    print(f"FAIL: queries failed: {obj['failed']}")
     sys.exit(1)
 
 nq = len(obj["queries"])
