@@ -1,8 +1,13 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.network.util.JavaUtils
 import graft.result.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/check_oracle.py). A query's output directory is removed
+  * before it runs, so a query that throws leaves no result from an
+  * earlier run behind, and the run exits 1 naming every query that
+  * threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,11 +24,14 @@ object Verify {
       .map(_.split(",").map(_.trim).toSet)
     val picked = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val failed = Seq.newBuilder[String]
     picked.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        JavaUtils.deleteRecursively(new java.io.File(s"$outDir/$name"))
+        fn(spark, sfDir).coalesce(1).write.parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // Cache hygiene (VERDICT r8; rule 3 of docs/CACHE_POLICY.md):
       // query-scoped persists otherwise accumulate across 255 queries
@@ -41,5 +49,10 @@ object Verify {
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val names = failed.result()
+    if (names.nonEmpty) {
+      System.err.println(s"[verify] ${names.size} queries failed: ${names.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,8 +1,11 @@
 package graft.federate
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** Multi-source federation: fan-out, per-source limits, heterogeneous
   * union, stats, fair-quota application, and ordered dedup.
@@ -17,13 +20,14 @@ import org.apache.spark.sql.expressions.Window
   *    sources scan in parallel across the cluster (no driver-side loop);
   *  - per-source failure tolerance substitutes an empty frame (O1/O2)
   *    without failing the query;
-  *  - stats are a groupBy().count() — a few rows per source on the driver;
-  *  - the quota plan is applied distributively: row_number() window per
-  *    (provider, url) + broadcast-joined quota + rank filter, shuffling
-  *    once on the window key;
-  *  - ordered dedup is a window over id ordered by provider precedence —
-  *    deterministic "first provider wins" (D1) instead of dropDuplicates'
-  *    arbitrary survivor.
+  *  - every source is limited to nResults in the plan (T4), so a federated
+  *    query's whole input is at most sources × nResults rows: it executes
+  *    once, as one ordered top-k collect (TakeOrderedAndProject), and
+  *    stats, the quota plan, its application and the dedup run on those
+  *    driver rows — one Spark job per query, the reference's gather-then-
+  *    plan shape (server.py:150-198) over a bounded gather;
+  *  - ordered dedup is deterministic "first provider wins" (D1): the row
+  *    with the lowest precedence rank, then the lowest order value.
   */
 object Federation {
 
@@ -61,10 +65,10 @@ object Federation {
         val ordered = orderCol.filter(_ => perSourceLimit.isDefined)
           .fold(filtered)(c => filtered.orderBy(col(c)))
         val limited = perSourceLimit.fold(ordered)(ordered.limit)
-        Some(limited
-          .withColumn("provider", lit(s.provider))
-          .withColumn("provider_url", lit(s.url))
-          .withColumn("provider_rank", lit(rank)))
+        Some(limited.withColumns(ListMap(
+          "provider" -> lit(s.provider),
+          "provider_url" -> lit(s.url),
+          "provider_rank" -> lit(rank))))
       } catch {
         case e: Exception =>
           failures += ((s"${s.provider}@${s.url}", e.getMessage))
@@ -88,15 +92,21 @@ object Federation {
     require(df.columns.contains("provider_rank"),
       "stats expects a fanOut-tagged frame (provider_rank column)")
     val rows = df.groupBy("provider", "provider_url")
-      .agg(count(lit(1)).as("n"), min(col("provider_rank")).as("rank"))
-      .orderBy(col("rank"), col("provider_url"))
+      .agg(count(lit(1)), min(col("provider_rank")))
       .collect()
-    val byProvider = scala.collection.mutable.LinkedHashMap
-      .empty[String, Vector[(String, Int)]]
-    rows.foreach { r =>
-      val n = r.getLong(2).toInt
-      val capped = r.getString(1) -> capPerUrl.fold(n)(math.min(n, _))
-      byProvider.updateWith(r.getString(0)) {
+    statsOf(rows.toSeq.map(r =>
+      (r.getString(0), r.getString(1), r.getLong(2), r.getInt(3))), capPerUrl)
+  }
+
+  /** Stats from (provider, url, count, min rank) groups: providers in
+    * precedence order, counts capped at `capPerUrl`. A rank names one
+    * registered source, so the (rank, url) order is total. */
+  private def statsOf(groups: Seq[(String, String, Long, Int)],
+                      capPerUrl: Option[Int]): QuotaPlanner.Stats = {
+    val byProvider = mutable.LinkedHashMap.empty[String, Vector[(String, Int)]]
+    groups.sortBy { case (_, u, _, rank) => (rank, u) }.foreach { case (p, u, n, _) =>
+      val capped = u -> capPerUrl.fold(n.toInt)(math.min(n.toInt, _))
+      byProvider.updateWith(p) {
         case Some(us) => Some(us :+ capped)
         case None     => Some(Vector(capped))
       }
@@ -104,37 +114,25 @@ object Federation {
     byProvider.toSeq.map { case (p, us) => p -> us.toSeq }
   }
 
-  /** Apply a quota plan distributively: rank rows within each
-    * (provider, url) by `orderCol` and keep rank ≤ quota. */
-  def applyPlan(df: DataFrame, plan: QuotaPlanner.Plan, orderCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val quotaDf = broadcast(
-      plan.flatMap { case (p, us) => us.map { case (u, q) => (p, u, q) } }
-        .toDF("provider", "provider_url", "quota"))
-    val w = Window.partitionBy("provider", "provider_url").orderBy(col(orderCol))
-    df.withColumn("__rank", row_number().over(w))
-      .join(quotaDf, Seq("provider", "provider_url"))
-      .filter(col("__rank") <= col("quota"))
-      .drop("__rank", "quota")
-  }
-
-  /** D1: deterministic cross-source dedup — first provider (lowest
-    * precedence rank) wins; ties inside a provider broken by `orderCol`. */
-  def dedupById(df: DataFrame, idCol: String, orderCol: String): DataFrame = {
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("provider_rank"), col(orderCol))
-    df.withColumn("__dd", row_number().over(w))
-      .filter(col("__dd") === 1)
-      .drop("__dd")
-  }
-
   final case class FederatedResult(data: DataFrame, stats: QuotaPlanner.Stats,
                                    plan: QuotaPlanner.Plan,
                                    failures: Seq[(String, String)])
 
-  /** Full federated query: fan-out → stats → fair plan → distributed
-    * application → ordered dedup → global truncation (T3). */
+  /** Full federated query: fan-out → stats → fair plan → quota
+    * application → ordered dedup → global truncation (T3).
+    *
+    * The fan-out executes once: every source is limited to `nResults`,
+    * so one ordered collect of at most sources × nResults rows holds all
+    * of it, and the rest runs on those rows:
+    *  - stats count the rows per (provider, url), capped at `nResults`;
+    *  - each (provider, url) keeps its first `quota` rows by `orderCol`;
+    *  - per id, the row of the lowest precedence rank wins (then the
+    *    lowest `orderCol`); null ids are one group;
+    *  - the first `maxReturned` rows by (precedence rank, `orderCol`)
+    *    are returned as a local frame, so reading it runs no job.
+    * Output columns: provider, provider_url, the sources' columns,
+    * provider_rank. `idCol` must be a string or integral column, so ids
+    * compare by value. */
   def federatedQuery(spark: SparkSession, sources: Seq[Source],
                      filter: Option[Column], nResults: Int,
                      idCol: String, orderCol: String,
@@ -143,12 +141,33 @@ object Federation {
       perSourceLimit = Some(nResults), orderCol = Some(orderCol))
     if (fo.data.columns.isEmpty)
       return FederatedResult(fo.data, Seq.empty, Seq.empty, fo.failures)
-    val st = stats(fo.data, capPerUrl = Some(nResults))
+    val idType = fo.data.schema(idCol).dataType
+    require(idType match {
+      case _: StringType | ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }, s"id column $idCol must be a string or integral type, not ${idType.simpleString}")
+    val tags = Seq("provider", "provider_url", "provider_rank")
+    val data = fo.data.select((Seq("provider", "provider_url") ++
+      fo.data.columns.filterNot(tags.contains) :+ "provider_rank").map(col): _*)
+    val rows = data.orderBy(col(orderCol)).limit(sources.size * nResults).collect()
+    val Seq(pI, uI, rI, idI) = (tags :+ idCol).map(data.schema.fieldIndex)
+    def source(r: Row) = (r.getString(pI), r.getString(uI))
+
+    val st = statsOf(rows.groupBy(source).toSeq.map { case ((p, u), rs) =>
+      (p, u, rs.length.toLong, rs.map(_.getInt(rI)).min) }, Some(nResults))
     val plan = QuotaPlanner.distributeQuotaFair(st, nResults)
-    val planned = applyPlan(fo.data, plan, orderCol)
-    val deduped = dedupById(planned, idCol, orderCol)
-    FederatedResult(
-      deduped.orderBy(col("provider_rank"), col(orderCol)).limit(maxReturned),
+    val left = mutable.Map.from(
+      plan.flatMap { case (p, us) => us.map { case (u, q) => (p, u) -> q } })
+    val planned = rows.filter { r =>
+      val q = left.getOrElse(source(r), 0)
+      if (q > 0) left(source(r)) = q - 1
+      q > 0
+    }
+    val seen = mutable.HashSet.empty[Option[Any]]
+    val kept = planned.sortBy(_.getInt(rI)) // stable: orderCol order within a rank
+      .filter(r => seen.add(Option(r.get(idI))))
+      .take(maxReturned)
+    FederatedResult(spark.createDataFrame(kept.toSeq.asJava, data.schema),
       st, plan, fo.failures)
   }
 }

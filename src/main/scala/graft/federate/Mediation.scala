@@ -13,9 +13,10 @@ object Mediation {
     * every cleaned result): DROP_ATTRS at
     * optimade_database/Optimade_Server/utils.py:109-125, CRYSTAL_DROP_ATTRS
     * at bohriumpublic .../utils.py:51-55, MOFDB_DROP_ATTRS at
-    * mofdb_database/Mofdb_Server/utils.py:9-16. Under Catalyst the drop
-    * also prunes the columns at the scan — strictly better than the
-    * reference's post-transfer strip. */
+    * mofdb_database/Mofdb_Server/utils.py:9-16. Over a lazy frame Catalyst
+    * prunes the dropped columns at the scan; over a federated result (a
+    * local frame of collected rows) it is the reference's post-transfer
+    * strip. */
   val OptimadeDropAttrs: Seq[String] = Seq(
     "cartesian_site_positions", "species_at_sites", "species", "immutable_id",
     "_alexandria_charges", "_alexandria_magnetic_moments", "_alexandria_forces",

@@ -21,10 +21,10 @@ import scala.collection.mutable
   *  - no URL quota exceeds its cap
   *  - per-clause totals differ by ≤1 unless capacity-bound
   *
-  * This is driver-side planning over tiny aggregates (provider counts from
-  * a groupBy-count, SURVEY A7) — the *application* of the plan to data is
-  * distributed (window rank filter in [[Federation]]). At 100 TB the stats
-  * aggregate is a few rows per source; the plan never touches row data.
+  * This is driver-side planning over per-(clause, url) counts (SURVEY
+  * A7); the plan never touches row data. [[Federation.federatedQuery]]
+  * applies it on the driver too, to a fan-out its per-source limits bound
+  * at sources × nResults rows.
   */
 object QuotaPlanner {
 

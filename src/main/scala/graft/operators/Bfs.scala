@@ -59,11 +59,17 @@ object Bfs {
     * so that count is a free size signal — a frontier above this many
     * rows takes the shuffled join instead of being collected to the
     * driver, making the scaladoc's "degrades gracefully" true without
-    * a code edit. 10M one-long rows ≈ 80 MB serialized, well under
-    * the 8 GB / 512M-row broadcast cap; results are identical on
-    * either path (the shuffled form is spec-pinned). [[Sssp]] shares
-    * the constant — its Bellman–Ford frontier can grow toward |V|
-    * mid-search, exactly the cliff this guards. */
+    * a code edit. Size it by the widest frame that shares it: Bfs's
+    * frontier is one long per row, but [[Sssp]]'s (src, dist) frontier
+    * and `Hierarchy.subtreeAgg`'s (desc, anc) jump set carry two. A
+    * broadcast hash relation holds each such row as a 24-byte UnsafeRow
+    * (null word + two longs) plus roughly 16 bytes of hash-index entry,
+    * so 10M rows is ≈ 400 MB per built relation — held on the driver
+    * while it builds and again on every executor. That is still under
+    * the 8 GB / 512M-row broadcast cap; results are identical on either path (the
+    * shuffled form is spec-pinned). Sssp shares the constant because
+    * its Bellman–Ford frontier can grow toward |V| mid-search, exactly
+    * the cliff this guards. */
   val BroadcastFrontierMaxRows = 10000000L
 
   /** Hop distances from `sources` ("node" column) over directed

@@ -87,7 +87,13 @@ object TableSync {
     * buckets, and run the exact row diff over dirty-bucket rows only.
     * `keyH` must reference only `keyCols`. Output: keyCols ++ (change:
     * I|U|D) — identical to a full [[ChangeCapture.snapshotDiff]]
-    * (spec-asserted), computed from a fraction of the data. */
+    * (spec-asserted), computed from a fraction of the data.
+    * Contract: key columns must be NON-NULL (q114's order key is). The
+    * row recovery groups by the keys, and a grouping key unifies NULLs:
+    * a NULL-keyed row on both sides becomes one U or no row here, where
+    * a SQL full outer join on `=` (q114's oracle) leaves the two
+    * unmatched (a D plus an I), and snapshotDiff, which matches them
+    * null-safely, reads the null key as a missing side (an I). */
   def syncDiff(oldDf: DataFrame, newDf: DataFrame, keyH: Column,
                rowH: Column, buckets: Int,
                keyCols: Seq[String], cmpCols: Seq[String]): DataFrame = {

@@ -73,6 +73,23 @@ class ToolsSpec extends AnyFunSuite {
     assert(out.result.cleanedStructures.head("id") == 1L)
   }
 
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (a, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("writing files does not run the tool's query a second time") {
     import spark.implicits._
     // repartitioned so the query runs as Spark jobs, not as a local
@@ -81,28 +98,43 @@ class ToolsSpec extends AnyFunSuite {
       (1L, "Fe2O3", -40.2, Timestamp.valueOf("2024-03-01 00:00:00")),
       (2L, "NaCl", -7.1, Timestamp.valueOf("2023-06-01 00:00:00")))
       .toDF("id", "formula", "energy", "submission_time").repartition(2)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     def jobsOf(outputDir: Option[String]): Int = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      val out = Tools.fetchOpenlamStructures(spark, crystals,
-        formula = Some("Fe2O3"), outputDir = outputDir)
+      val (out, jobs) = jobsDuring(Tools.fetchOpenlamStructures(spark, crystals,
+        formula = Some("Fe2O3"), outputDir = outputDir))
       assert(out.result.code == 0 && out.result.nFound == 1)
       assert(out.files.size == (if (outputDir.isDefined) 1 else 0))
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.get()
+      jobs
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val without = jobsOf(None)
-      val withFiles = jobsOf(Some(Files.createTempDirectory("tools-jobs").toString))
-      assert(without > 0)
-      assert(withFiles == without, s"with outputDir: $withFiles jobs, without: $without")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val without = jobsOf(None)
+    val withFiles = jobsOf(Some(Files.createTempDirectory("tools-jobs").toString))
+    assert(without > 0)
+    assert(withFiles == without, s"with outputDir: $withFiles jobs, without: $without")
+  }
+
+  test("each OPTIMADE tool call runs one Spark job, with or without files") {
+    // parquet-backed, so every source is a file scan that runs as Spark
+    // jobs, not a local relation collected without one; each frame is
+    // read once, as a server holds its registered sources
+    val root = Files.createTempDirectory("tools-sources").toString
+    val sources = structureSources.map { s =>
+      val path = s"$root/${s.provider}"
+      s.load().write.parquet(path)
+      val frame = spark.read.parquet(path)
+      s.copy(load = () => frame)
+    }
+    val calls: Seq[(String, Option[String] => Tools.ToolOutput)] = Seq(
+      "filter" -> (d => Tools.fetchStructuresWithFilter(spark, sources,
+        """elements HAS "Si"""", outputDir = d)),
+      "spg" -> (d => Tools.fetchStructuresWithSpg(spark, sources, 221, outputDir = d)),
+      "bandgap" -> (d => Tools.fetchStructuresWithBandgap(spark, sources,
+        Some(0.5), Some(3.0), outputDir = d)))
+    for ((tool, call) <- calls;
+         dir <- Seq(None, Some(Files.createTempDirectory(s"tools-$tool").toString))) {
+      val (out, jobs) = jobsDuring(call(dir))
+      assert(out.result.code == 0, s"$tool: ${out.result.message}")
+      assert(out.files.nonEmpty == dir.isDefined)
+      assert(jobs == 1, s"$tool outputDir=${dir.isDefined}: $jobs jobs")
+    }
   }
 
   test("envelope codes: -9999 on empty success, -1 on query error") {

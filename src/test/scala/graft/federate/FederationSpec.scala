@@ -1,6 +1,7 @@
 package graft.federate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -37,23 +38,23 @@ class FederationSpec extends AnyFunSuite {
     assert(rows.head.getAs[Any]("extra_col") == null)
   }
 
-  test("stats + plan + distributed application (A7 + Q1)") {
-    val res = fanOut(spark, Seq(
+  test("stats + plan + quota application (A7 + Q1)") {
+    val sources = Seq(
       src("p1", "u1", (1 to 8).map(i => s"a$i")),
-      src("p2", "u2", (1 to 3).map(i => s"b$i"))))
-    val st = stats(res.data)
+      src("p2", "u2", (1 to 3).map(i => s"b$i")))
+    val st = stats(fanOut(spark, sources).data)
     assert(st.toMap == Map("p1" -> Seq("u1" -> 8), "p2" -> Seq("u2" -> 3)))
-    val plan = QuotaPlanner.distributeQuotaFair(st, 8)
+    val fr = federatedQuery(spark, sources, filter = None, nResults = 8,
+      idCol = "id", orderCol = "id")
+    assert(fr.stats == st)
     // p2 capacity-bound at 3 → p1 water-fills to 5
-    assert(plan.toMap == Map("p1" -> Seq("u1" -> 5), "p2" -> Seq("u2" -> 3)))
-    val applied = applyPlan(res.data, plan, "id")
-    val byProv = applied.groupBy("provider").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byProv == Map("p1" -> 5L, "p2" -> 3L))
-    // rank filter keeps the FIRST rows by order column
-    val p1ids = applied.filter(col("provider") === "p1")
-      .select("id").collect().map(_.getString(0)).toSet
-    assert(p1ids == Set("a1", "a2", "a3", "a4", "a5"))
+    assert(fr.plan.toMap == Map("p1" -> Seq("u1" -> 5), "p2" -> Seq("u2" -> 3)))
+    val rows = fr.data.collect()
+    val byProv = rows.groupBy(_.getAs[String]("provider")).view.mapValues(_.length).toMap
+    assert(byProv == Map("p1" -> 5, "p2" -> 3))
+    // the quota keeps the FIRST rows by order column
+    val p1ids = rows.filter(_.getAs[String]("provider") == "p1").map(_.getAs[String]("id"))
+    assert(p1ids.toSet == Set("a1", "a2", "a3", "a4", "a5"))
   }
 
   test("stats orders providers by precedence, not alphabetically (A7)") {
@@ -89,13 +90,90 @@ class FederationSpec extends AnyFunSuite {
   }
 
   test("ordered dedup: first provider wins (D1)") {
-    val res = fanOut(spark, Seq(
+    val fr = federatedQuery(spark, Seq(
       src("p1", "u1", Seq("x", "y")),
-      src("p2", "u2", Seq("y", "z"))))
-    val deduped = dedupById(res.data, "id", "id")
-    val winners = deduped.select("id", "provider").collect()
+      src("p2", "u2", Seq("y", "z"))),
+      filter = None, nResults = 4, idCol = "id", orderCol = "id")
+    val winners = fr.data.select("id", "provider").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(winners == Map("x" -> "p1", "y" -> "p1", "z" -> "p2"))
+  }
+
+  /** The distributed form federatedQuery replaced, kept as its reference:
+    * row_number per (provider, url) ≤ quota, a first-provider dedup
+    * window, then order and limit. */
+  private def windowedReference(sources: Seq[Source], nResults: Int,
+                                idCol: String, orderCol: String,
+                                maxReturned: Int): (DataFrame, QuotaPlanner.Plan) = {
+    import spark.implicits._
+    val fo = fanOut(spark, sources, perSourceLimit = Some(nResults),
+      orderCol = Some(orderCol))
+    val plan = QuotaPlanner.distributeQuotaFair(stats(fo.data, Some(nResults)), nResults)
+    val quota = plan.flatMap { case (p, us) => us.map { case (u, q) => (p, u, q) } }
+      .toDF("provider", "provider_url", "quota")
+    val perSource = Window.partitionBy("provider", "provider_url").orderBy(col(orderCol))
+    val perId = Window.partitionBy(col(idCol)).orderBy(col("provider_rank"), col(orderCol))
+    val out = fo.data.withColumn("__rank", row_number().over(perSource))
+      .join(quota, Seq("provider", "provider_url"))
+      .filter(col("__rank") <= col("quota"))
+      .drop("__rank", "quota")
+      .withColumn("__dd", row_number().over(perId))
+      .filter(col("__dd") === 1)
+      .drop("__dd")
+      .orderBy(col("provider_rank"), col(orderCol))
+      .limit(maxReturned)
+    (out, plan)
+  }
+
+  test("federatedQuery equals the windowed reference pipeline") {
+    import spark.implicits._
+    // `ord` is unique across all rows, so both sides are deterministic;
+    // ids overlap across providers and some are null
+    def rows(provider: String, url: String, base: Long,
+             ids: Seq[String]): Source =
+      Source(provider, url, () => ids.zipWithIndex
+        .map { case (id, i) => (id, base + i, s"$provider@$url") }
+        .toDF("id", "ord", "payload"))
+    val ids = (1 to 12).map(i => if (i % 5 == 0) null else s"s${i % 7}")
+    val sources = Seq(
+      rows("p1", "u1", 100, ids),
+      rows("p2", "u2", 200, ids.reverse),              // overlapping ids
+      rows("p2", "u3", 300, Seq("s1", null, "t1")),    // capacity-bound
+      rows("p3", "u4", 400, Seq.empty),                // empty source
+      rows("p1", "u1", 500, Seq("s3", "t2", null)),    // (p1, u1) again, rank 4
+      rows("p4", "u5", 50, Seq("s2", "s6", "t3", "t4")))
+    for ((n, maxRet) <- Seq((0, 30), (1, 30), (4, 30), (10, 30), (10, 5), (40, 7))) {
+      val fr = federatedQuery(spark, sources, filter = None, nResults = n,
+        idCol = "id", orderCol = "ord", maxReturned = maxRet)
+      val (ref, refPlan) = windowedReference(sources, n, "id", "ord", maxRet)
+      assert(fr.plan == refPlan, s"n=$n")
+      assert(fr.data.columns.toSeq == ref.columns.toSeq, s"n=$n")
+      assert(fr.data.collect().toSeq == ref.collect().toSeq, s"n=$n maxReturned=$maxRet")
+    }
+    // the cases above reach the quota, the dedup and the truncation
+    val fr = federatedQuery(spark, sources, filter = None, nResults = 10,
+      idCol = "id", orderCol = "ord", maxReturned = 5)
+    assert(QuotaPlanner.planTotal(fr.plan) == 10)
+    assert(fr.data.count() == 5)
+    val all = federatedQuery(spark, sources, filter = None, nResults = 40,
+      idCol = "id", orderCol = "ord", maxReturned = 100).data.collect()
+    val allIds = all.map(_.getAs[String]("id"))
+    assert(allIds.count(_ == null) == 1)
+    assert(allIds.distinct.length == allIds.length)
+  }
+
+  test("federatedQuery rejects ids that are neither strings nor integers") {
+    import spark.implicits._
+    def one(df: => DataFrame) = Seq(Source("p1", "u1", () => df))
+    for (bad <- Seq(one(Seq((1.5, "x")).toDF("id", "payload")),
+                    one(Seq((Array[Byte](1), "x")).toDF("id", "payload")))) {
+      val e = intercept[IllegalArgumentException](federatedQuery(spark, bad,
+        filter = None, nResults = 5, idCol = "id", orderCol = "payload"))
+      assert(e.getMessage.contains("string or integral"))
+    }
+    val ok = federatedQuery(spark, one(Seq((7L, "x")).toDF("id", "payload")),
+      filter = None, nResults = 5, idCol = "id", orderCol = "id")
+    assert(ok.data.collect().map(_.getAs[Long]("id")).toSeq == Seq(7L))
   }
 
   test("federatedQuery end-to-end with truncation (T3)") {
