@@ -104,9 +104,14 @@ object Tools {
         val pred = OptimadeCompiler.compileOrThrow(canonical)
         val fr = Federation.federatedQuery(
           spark, sources, Some(pred), nResults, idCol, idCol)
-        finish(Mediation.dropAttrs(fr.data), outputDir, canonical,
+        // Files are written from the full rows (a CIF needs the site
+        // columns); the P1 drop applies only to the envelope's cleaned
+        // copies, the reference's order (Optimade_Server/utils.py:387-485).
+        val out = finish(fr.data, outputDir, canonical,
           fr.stats, fr.plan, fr.failures, writeCif = asCif,
           nResults = nResults)
+        out.copy(result = out.result.copy(cleanedStructures =
+          out.result.cleanedStructures.map(_ -- Mediation.OptimadeDropAttrs)))
       }
     } catch { case e: Exception => failure(e) }
 

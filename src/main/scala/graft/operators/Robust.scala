@@ -226,7 +226,9 @@ object Robust {
       .withColumn("_off", coalesce(sum(col("_ct")).over(offW), lit(0L)))
       .withColumn("_tot", sum(col("_ct")).over(Window.partitionBy(grpCol)))
       .select(col(grpCol), col("_ck"), col("_off"), col("_tot"))
-    inChunk.join(broadcast(offs), Seq(grpCol, "_ck"))
+    // a plain join: offs is one row per (group, band), so AQE broadcasts
+    // it while it is small and nothing forces a broadcast when it is not
+    inChunk.join(offs, Seq(grpCol, "_ck"))
       .filter((col("_crun") + col("_off")) * 2 >= col("_tot"))
       .groupBy(grpCol)
       .agg(min(col("_v")).as("wmedian"), max(col("_tot")).as("total_w"))

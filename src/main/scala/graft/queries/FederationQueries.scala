@@ -163,7 +163,7 @@ object FederationQueries {
       val hashed =
         try {
           val (files, warns) = graft.result.CifWriter.writeStructures(
-            rows, dirPath.toString, idCol = "id", asCif = false)
+            rows, dirPath.toString, asCif = false)
           require(warns.isEmpty, s"sink warnings: $warns")
           files.map { f =>
             val p = java.nio.file.Paths.get(f)

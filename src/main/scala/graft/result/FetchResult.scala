@@ -203,38 +203,33 @@ object CifWriter {
     sb.toString
   }
 
-  /** Write one CIF + one pretty JSON per row of a (small, already
-    * truncated) result. Failed writes are reported, not fatal, and do not
-    * claim the id (O4 retry semantics belong to the caller's dedup). */
+  /** Write one CIF or one JSON per row of a (small, already truncated)
+    * result, named by its `id`. A CIF reads the OPTIMADE columns
+    * `lattice_vectors`, `species_at_sites` and `cartesian_site_positions`.
+    * Failed writes are reported, not fatal, and do not claim the id (O4
+    * retry semantics belong to the caller's dedup). */
   def writeStructures(df: DataFrame, outDir: String,
-                      idCol: String = "id", latticeCol: String = "lattice_vectors",
-                      speciesCol: String = "species_at_sites",
-                      positionsCol: String = "cartesian_site_positions",
                       asCif: Boolean = true): (Seq[String], Seq[String]) =
     // ≤ MaxReturnedStructs rows by contract
-    writeRows(df.collect().toSeq, outDir, idCol, latticeCol, speciesCol,
-      positionsCol, asCif)
+    writeRows(df.collect().toSeq, outDir, asCif)
 
   /** [[writeStructures]] over rows the caller has already collected, so a
     * tool call that returns the rows and writes them runs its query once. */
   def writeRows(rows: Seq[Row], outDir: String,
-                idCol: String = "id", latticeCol: String = "lattice_vectors",
-                speciesCol: String = "species_at_sites",
-                positionsCol: String = "cartesian_site_positions",
                 asCif: Boolean = true): (Seq[String], Seq[String]) = {
     val dir = Paths.get(outDir)
     Files.createDirectories(dir)
     val files = Seq.newBuilder[String]
     val warnings = Seq.newBuilder[String]
     rows.foreach { row =>
-      val id = row.getAs[Any](idCol).toString
+      val id = row.getAs[Any]("id").toString
       try {
         if (asCif) {
           // Spark hands back mutable ArraySeq; normalize to immutable
-          val lat = row.getSeq[scala.collection.Seq[Double]](row.fieldIndex(latticeCol))
+          val lat = row.getSeq[scala.collection.Seq[Double]](row.fieldIndex("lattice_vectors"))
             .map(_.toSeq).toSeq
-          val sp = row.getSeq[String](row.fieldIndex(speciesCol)).toSeq
-          val pos = row.getSeq[scala.collection.Seq[Double]](row.fieldIndex(positionsCol))
+          val sp = row.getSeq[String](row.fieldIndex("species_at_sites")).toSeq
+          val pos = row.getSeq[scala.collection.Seq[Double]](row.fieldIndex("cartesian_site_positions"))
             .map(_.toSeq).toSeq
           val p = dir.resolve(s"$id.cif")
           Files.writeString(p, cifText(id, lat, sp, pos))
@@ -251,7 +246,7 @@ object CifWriter {
     (files.result(), warnings.result())
   }
 
-  private def rowJson(row: Row): String =
+  private[result] def rowJson(row: Row): String =
     Json.obj(row.schema.fieldNames.toSeq.map { f =>
       f -> (row.getAs[Any](f) match {
         case s: collection.Seq[_] => s.toSeq

@@ -126,7 +126,7 @@ object MofSaver {
                 s"Result $i ($ident): User requested CIF format but no cif_path found in query result"
               if (formats.contains("cif") || formats.contains("json")) {
                 val p = out.resolve(s"$stem.json")
-                try { Files.writeString(p, rowJson(row)); files += p.toString }
+                try { Files.writeString(p, CifWriter.rowJson(row)); files += p.toString }
                 catch { case e: Exception =>
                   warnings += s"Failed to save JSON file for $ident: ${e.getMessage}" }
               }
@@ -175,13 +175,4 @@ object MofSaver {
     }
     sb.toString
   }
-
-  private def rowJson(row: Row): String =
-    Json.obj(row.schema.fieldNames.toSeq.map { f =>
-      f -> (row.getAs[Any](f) match {
-        case s: collection.Seq[_] => s.toSeq
-        case m: collection.Map[_, _] => m.toMap.map { case (k, v) => k.toString -> v }
-        case other => other
-      })
-    })
 }

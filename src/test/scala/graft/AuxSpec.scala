@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * CORRECTNESS_r03's q47. */
 class AuxSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("writeStamped skips the write when the stamp already matches") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stamp")

@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bytes) to zero. */
 class CachesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("composed pipeline: bounded cached frames; releaseAll drains to zero") {
     import spark.implicits._

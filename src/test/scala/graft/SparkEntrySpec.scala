@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SparkEntrySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("entry() returns rows on sf0.001 (driver t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -84,5 +79,21 @@ class SparkEntrySpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"nested comment opener (scaladoc glob trap) at: ${offenders.mkString(", ")}")
+  }
+
+  test("specs take their session from graft.LocalSession(4), not their own builder") {
+    // Specs share one forked JVM, where getOrCreate() returns the first
+    // session built, so a spec's own builder is dead text. The needle is
+    // split so that this file does not match itself.
+    import java.nio.file._
+    import scala.jdk.CollectionConverters._
+    val needle = "SparkSession" + ".builder"
+    val offenders = Files.walk(Paths.get("src/test/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftExtensionsSpec.scala") // tests a fresh session
+      .filter(p => Files.readString(p).contains(needle))
+      .map(_.toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"${offenders.size} specs build their own session: ${offenders.mkString(", ")}")
   }
 }

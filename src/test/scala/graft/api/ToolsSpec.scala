@@ -8,12 +8,7 @@ import graft.federate.Federation.Source
 
 class ToolsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def structureSources: Seq[Source] = {
     import spark.implicits._
@@ -45,6 +40,32 @@ class ToolsSpec extends AnyFunSuite {
     assert(manifest.contains("O2Si")) // canonicalized filter recorded
     assert(manifest.contains("\"plan\""))
     assert(out.files.nonEmpty) // one json per structure
+  }
+
+  test("filter tool CIF export: one CIF per returned id, no site columns in the envelope") {
+    import spark.implicits._
+    val cube = Seq(Seq(4.0, 0.0, 0.0), Seq(0.0, 4.0, 0.0), Seq(0.0, 0.0, 4.0))
+    val src = Source("alexandria", "https://alexandria.example", () => Seq(
+      ("c1", Seq("Na", "Cl"), cube, Seq("Na", "Cl"),
+        Seq(Seq(0.0, 0.0, 0.0), Seq(2.0, 2.0, 2.0))),
+      ("c2", Seq("Si"), cube, Seq("Si"), Seq(Seq(1.0, 1.0, 1.0))))
+      .toDF("id", "elements", "lattice_vectors", "species_at_sites",
+        "cartesian_site_positions"))
+    val dir = Files.createTempDirectory("tools-cif").toString
+    val out = Tools.fetchStructuresWithFilter(spark, Seq(src),
+      """elements HAS "Na" OR elements HAS "Si"""", outputDir = Some(dir), asCif = true)
+    assert(out.result.code == 0, out.result.message)
+    val ids = out.result.cleanedStructures.map(_("id").toString)
+    assert(ids.toSet == Set("c1", "c2"))
+    assert(out.files.map(f => Paths.get(f).getFileName.toString).toSet ==
+      ids.map(id => s"$id.cif").toSet)
+    ids.foreach { id =>
+      assert(Files.readString(Paths.get(dir, s"$id.cif")).startsWith(s"data_$id\n"))
+    }
+    assert(out.result.cleanedStructures.forall(m =>
+      !m.contains("species_at_sites") && !m.contains("cartesian_site_positions")))
+    val manifest = Files.readString(Paths.get(dir, "summary.json"))
+    assert(!manifest.contains("failed to save"), manifest)
   }
 
   test("fetch_structures_with_spg and _with_bandgap over mediated columns") {

@@ -5,12 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class OptimadeCompilerSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def structures = {
     import spark.implicits._

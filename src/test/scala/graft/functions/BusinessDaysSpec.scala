@@ -7,12 +7,7 @@ import java.time.{DayOfWeek, LocalDate}
 
 class BusinessDaysSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def busdays(a: String, b: String): Long = {
     import spark.implicits._

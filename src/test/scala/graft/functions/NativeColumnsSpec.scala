@@ -14,11 +14,7 @@ class NativeColumnsSpec extends AnyFunSuite {
 
   // a fresh session: its own function registry, nothing pre-registered
   // by other specs sharing the JVM
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
     .newSession()
 
   private def registryNames: Set[String] =

@@ -7,11 +7,7 @@ import graft.operators.Dedup
 
 class VectorExprsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def randVecs(n: Int, dim: Int, seed: Long) = {
     import spark.implicits._

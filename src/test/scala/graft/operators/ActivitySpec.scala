@@ -6,12 +6,7 @@ import java.sql.Timestamp
 
 class ActivitySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   // midnight-ish UTC timestamps `day` days after 2023-11-14
   private def ts(day: Int, hour: Int = 3) =

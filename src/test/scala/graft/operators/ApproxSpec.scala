@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ApproxSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("HLL approx_count_distinct within 5% of exact on lineitem keys") {
     val li = graft.tables.Tables.lineitem(spark, "/root/testdata/sf0.01")

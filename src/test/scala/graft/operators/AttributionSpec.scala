@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class AttributionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   /** (event_id, ms, user_id, event_type) → events frame. */
   private def ev(rows: Seq[(Long, Long, Long, String)]) = {

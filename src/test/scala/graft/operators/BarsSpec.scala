@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class BarsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
   import spark.implicits._
 
   private def ts(ms: Long) = new Timestamp(ms)

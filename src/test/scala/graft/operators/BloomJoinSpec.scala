@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class BloomJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("bloom-pruned semi join ≡ plain semi join on randomized key sets") {
     import spark.implicits._

@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ChangeCaptureSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("snapshotDiff: I/U/D classification, unchanged dropped, null-safe compare") {
     import spark.implicits._

@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ChunkerSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def chunksOf(text: String, w: Int, s: Int): Seq[(Long, Long, Long, String)] = {
     import spark.implicits._

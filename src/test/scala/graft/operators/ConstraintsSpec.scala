@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ConstraintsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
   import spark.implicits._
 
   test("rowAudit evaluates every rule in one pass with exact counts") {

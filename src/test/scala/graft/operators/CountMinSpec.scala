@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class CountMinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def skewedKeys(n: Int, seed: Int): Seq[Long] = {
     val rnd = new scala.util.Random(seed)

@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ErasureSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
   import spark.implicits._
 
   test("purgeCounts splits a table into purge/keep by tombstone key") {

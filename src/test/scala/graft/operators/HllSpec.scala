@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class HllSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("idxRankJvm ≡ the Column forms on random and edge keys") {
     import spark.implicits._

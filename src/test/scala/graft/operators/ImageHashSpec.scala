@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ImageHashSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def img(w: Int, h: Int)(px: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
     val rgb = new Array[Byte](w * h * 3)

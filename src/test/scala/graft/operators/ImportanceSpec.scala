@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ImportanceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("decimal div matches the BIGINT integral quotient (oracle bridge)") {
     // the weight formula carries cnt·SCALE as DECIMAL(38,0) for 100-TB

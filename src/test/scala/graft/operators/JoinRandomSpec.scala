@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * miss. */
 class JoinRandomSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("asofMatch ≡ brute force on random inputs (ties, skew, unmatched)") {
     import spark.implicits._

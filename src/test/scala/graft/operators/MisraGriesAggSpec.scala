@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class MisraGriesAggSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def sketchOf(tokens: org.apache.spark.sql.DataFrame, k: Int): Map[String, Long] =
     tokens.agg(MisraGriesAgg.misra_gries(col("token"), k).as("s"))

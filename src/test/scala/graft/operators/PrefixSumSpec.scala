@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class PrefixSumSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   // 1000 rows over ~20 chunks, money-like values, shuffled input order
   private def fixture(seed: Int) = {

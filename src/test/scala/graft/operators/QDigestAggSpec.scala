@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class QDigestAggSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private val Probes = Seq(250, 500, 750, 950)
 

@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class RepetitionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("grams: start positions with multiplicity, short docs empty") {
     import spark.implicits._

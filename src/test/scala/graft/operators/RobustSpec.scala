@@ -5,12 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class RobustSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
   import spark.implicits._
 
   test("groupMedian picks the lower-median element per group") {

@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SamplingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
   import spark.implicits._
 
   // ids with weights 1..n shuffled into arrival order

@@ -8,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ScdSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def ts(s: Long) = new Timestamp(s * 1000L)
 

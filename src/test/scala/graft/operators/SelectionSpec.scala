@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SelectionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("rankValues ≡ sorted reference on random data (negatives, dups)") {
     import spark.implicits._

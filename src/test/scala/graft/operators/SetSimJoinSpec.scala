@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SetSimJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def run(sets: Map[Long, Set[String]], tNum: Int, tDen: Int) = {
     import spark.implicits._

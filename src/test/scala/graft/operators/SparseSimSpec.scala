@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SparseSimSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def runTf(rows: Seq[(Long, String, Long)], maxDf: Long, minDot: Long)
       : Map[(Long, Long), (Long, Long, Long)] = {

@@ -7,11 +7,7 @@ import java.nio.file.Files
 
 class ZOrderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private val GridBits = 3 // 8×8 = 64 cells
 

@@ -7,11 +7,7 @@ import graft.queries.MofScenarioQueries
 
 class MofScenarioSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   test("shred: 10 star tables with FK integrity") {
     val star = MofSchema.shred(MofFixtures.nested(spark))

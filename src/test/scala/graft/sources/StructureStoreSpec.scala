@@ -7,15 +7,7 @@ import java.nio.file.Files
 
 class StructureStoreSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val warehouse = Files.createTempDirectory("graft-warehouse").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def structures = {
     import spark.implicits._

@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SqlGuardSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private def ok(sql: String): Unit =
     assert(SqlGuard.validate(spark, sql).isRight, s"should pass: $sql")

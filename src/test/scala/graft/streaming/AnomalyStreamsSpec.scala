@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class AnomalyStreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   import EventStreams.Event
   import AnomalyStreams.Alarm

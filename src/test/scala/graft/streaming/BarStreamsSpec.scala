@@ -8,12 +8,7 @@ import java.nio.file.Files
 
 class BarStreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private lazy val streamDir: String = {
     val dir = Files.createTempDirectory("graft-bars").toString

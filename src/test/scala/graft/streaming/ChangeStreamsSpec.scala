@@ -11,12 +11,7 @@ import graft.operators.ChangeCapture
 
 class ChangeStreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private val schema = StructType(Seq(
     StructField("k", LongType), StructField("ts", TimestampType),

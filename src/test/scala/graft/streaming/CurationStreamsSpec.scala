@@ -9,11 +9,7 @@ import java.nio.file.Files
 
 class CurationStreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private val schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType)))

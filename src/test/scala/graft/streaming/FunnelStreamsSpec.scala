@@ -13,12 +13,7 @@ import graft.operators.Funnel
 
 class FunnelStreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private val schema = StructType(Seq(
     StructField("user_id", LongType), StructField("ts", TimestampType),

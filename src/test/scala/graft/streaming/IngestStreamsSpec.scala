@@ -11,12 +11,7 @@ import graft.operators.Dedup
 
 class IngestStreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("ts", TimestampType),

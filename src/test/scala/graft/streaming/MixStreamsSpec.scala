@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MixStreamsSpec extends AnyFunSuite {
   import MixStreams.{MixDoc, SlotAssign}
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   // one group, two sources: a alloc 2, b alloc 3, epoch T=10
   private val alloc = Map(("g", "a") -> 2L, ("g", "b") -> 3L)

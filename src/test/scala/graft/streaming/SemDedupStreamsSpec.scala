@@ -8,11 +8,7 @@ import java.nio.file.Files
 
 class SemDedupStreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private val sf = "/root/testdata/sf0.001"
   private val K = 8

@@ -12,11 +12,7 @@ import java.nio.file.Files
   */
 class SourceFormatsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.LocalSession(4)
 
   private lazy val docs = Tables.documents(spark, "/root/testdata/sf0.001")
 
