@@ -24,10 +24,7 @@ object Bench {
     // two polluted runs; a median of 3 tolerates one. This is the same
     // signature as the r05 gate's contiguous q57–q68 cluster.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    // Dev-only AQE toggle for measuring adaptive-execution overhead at
-    // bench scale (the driver never sets it).
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toBoolean
-    val spark = LocalSession(cpus, aqe)
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // The per-query RDD sweep below WARNs once per localCheckpointed
     // RDD ("lineage has been truncated...cannot be recomputed") —

@@ -4,16 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** The session every main runs under, so the plans Explain prints and
   * Profile measures are the plans Bench times and Verify checks:
-  * `local[cores]` with one shuffle partition per core, AQE on (Bench's
-  * dev-only SPARK_GRAFT_AQE can turn it off), UTC and no UI.
+  * `local[cores]` with one shuffle partition per core, AQE and its
+  * partition coalescing on, UTC and no UI.
   */
 object LocalSession {
-  def apply(cores: Int, aqe: Boolean = true): SparkSession =
+  def apply(cores: Int): SparkSession =
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // 80 queries x several WSCG fragments each blows through the
       // default 100-entry generated-class cache, so pass-interleaved
       // runs would re-janino-compile (and re-JIT) every fragment every

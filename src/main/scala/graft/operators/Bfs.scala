@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Frontier iteration (the Pregel BFS): the state is (node, dist) for
   * every VISITED node; each round expands only the newest frontier —
-  * frontier ⋈ edges (frontier broadcast by default, see below), then
+  * frontier ⋈ edges (frontier broadcast, see below), then
   * ONE node-keyed aggregation that is simultaneously the candidate
   * dedup (distinct) and the visited-set anti join: candidates carry a
   * 0 marker, visited nodes a 1, and max-per-node keeps exactly the
@@ -20,14 +20,9 @@ import org.apache.spark.sql.functions._
   * ONE exchange instead of three (guide §2.4; r12 optimization round:
   * q110 went 76 → ~40 scheduler jobs, 2.27 → ~1.2 s at sf0.1).
   *
-  * `broadcastFrontier` (default true) broadcasts the frontier into the
-  * edge join — the [[PageRank]] `broadcastRanks` precedent: AQE cannot
-  * size a mid-loop checkpointed table (LogicalRDD carries only default
-  * stats), so without the hint every round pays a full edge-list
-  * Exchange + sort on the probe side. A frontier is bounded by the
-  * node set; for graphs whose peak frontier exceeds executor memory
-  * (billions of nodes), flip it off and the join degrades gracefully
-  * to the shuffled form. Rounds = eccentricity of the source set
+  * The frontier goes into the edge join through
+  * [[Iterate.broadcastIfSmall]] with the loop's own frontier count.
+  * Rounds = eccentricity of the source set
   * (contrast [[Hierarchy]]'s pointer jumping, which doubles strides
   * for O(log depth) rounds — that trick needs the functional-graph
   * property "one outgoing pointer per node"; on a general graph the
@@ -54,43 +49,23 @@ object Bfs {
     * chain at maxDepth=250 finishes with bounded plan depth). */
   val CheckpointEvery = 20
 
-  /** Auto-fallback ceiling for the per-round frontier broadcast (r12
-    * ADVICE / r13): the loop already counts the frontier every round,
-    * so that count is a free size signal — a frontier above this many
-    * rows takes the shuffled join instead of being collected to the
-    * driver, making the scaladoc's "degrades gracefully" true without
-    * a code edit. Size it by the widest frame that shares it: Bfs's
-    * frontier is one long per row, but [[Sssp]]'s (src, dist) frontier
-    * and `Hierarchy.subtreeAgg`'s (desc, anc) jump set carry two. A
-    * broadcast hash relation holds each such row as a 24-byte UnsafeRow
-    * (null word + two longs) plus roughly 16 bytes of hash-index entry,
-    * so 10M rows is ≈ 400 MB per built relation — held on the driver
-    * while it builds and again on every executor. That is still under
-    * the 8 GB / 512M-row broadcast cap; results are identical on either path (the
-    * shuffled form is spec-pinned). Sssp shares the constant because
-    * its Bellman–Ford frontier can grow toward |V| mid-search, exactly
-    * the cliff this guards. */
-  val BroadcastFrontierMaxRows = 10000000L
-
   /** Hop distances from `sources` ("node" column) over directed
     * `edges` ("src", "dst") — feed both directions for an undirected
     * graph. Returns (node, dist); dist = 0 for sources, minimal hop
     * count otherwise; unreachable nodes absent. */
   def distances(edges: DataFrame, sources: DataFrame,
-                maxDepth: Int = 40,
-                broadcastFrontier: Boolean = true): DataFrame =
+                maxDepth: Int = 40): DataFrame =
     distancesPre(
       edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")).distinct().localCheckpoint(),
-      sources, maxDepth, broadcastFrontier)
+      sources, maxDepth)
 
   /** [[distances]] over an ALREADY normalized edge frame — (src, dst)
     * longs, distinct, materialized — so a caller running several
     * sweeps over the same graph ([[GraphStats.pseudoDiameter]]'s
     * double sweep) pays the normalization once, not per sweep. */
   private[operators] def distancesPre(e: DataFrame, sources: DataFrame,
-                                      maxDepth: Int,
-                                      broadcastFrontier: Boolean): DataFrame = {
+                                      maxDepth: Int): DataFrame = {
     var dist = Iterate.materialize(
       sources.select(col("node").cast("long").as("node")).distinct()
         .withColumn("dist", lit(0L)))
@@ -106,9 +81,8 @@ object Bfs {
       // counting through the uncheckpointed plan loses codegen'd
       // aggregation locality.)
       val fr = frontier.select(col("node").as("src"))
-      val bc = broadcastFrontier && frontierSize <= BroadcastFrontierMaxRows
       val next = Iterate.materialize(
-        (if (bc) broadcast(fr) else fr).join(e, "src")
+        Iterate.broadcastIfSmall(fr, frontierSize).join(e, "src")
           .select(col("dst").as("node"), lit(0L).as("_vis"))
           .unionByName(dist.select(col("node"), lit(1L).as("_vis")))
           .groupBy("node").agg(max(col("_vis")).as("_vis"))
@@ -142,14 +116,13 @@ object Bfs {
     * — |state| is bounded by |seeds|·|reachable|, which is the
     * operator's deliberate budget (landmark methods pick tens of
     * seeds, never the node set). The per-round join/dedup/anti shape
-    * (and the `broadcastFrontier` default) matches [[distances]].
+    * (and the frontier broadcast) matches [[distances]].
     *
     * Returns (node, seed, dist); a seed unreachable from `node` simply
     * contributes no row (the closeness consumer divides by the REACHED
     * count, keeping disconnected components honest). */
   def landmarkDistances(edges: DataFrame, seeds: DataFrame,
-                        maxDepth: Int = 40,
-                        broadcastFrontier: Boolean = true): DataFrame = {
+                        maxDepth: Int = 40): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct().localCheckpoint()
     var dist = Iterate.materialize(
@@ -160,9 +133,9 @@ object Bfs {
     var frontierSize = frontier.count()
     while (frontierSize > 0 && depth < maxDepth) {
       depth += 1
-      val fr = if (broadcastFrontier) broadcast(frontier) else frontier
       val next = Iterate.materialize(
-        fr.join(e, frontier("node") === e("src"))
+        Iterate.broadcastIfSmall(frontier, frontierSize)
+          .join(e, frontier("node") === e("src"))
           .select(col("dst").as("node"), col("seed"), lit(0L).as("_vis"))
           .unionByName(dist.select(col("node"), col("seed"),
             lit(1L).as("_vis")))

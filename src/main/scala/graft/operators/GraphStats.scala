@@ -257,14 +257,13 @@ object GraphStats {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct().localCheckpoint()
     val seed = e.agg(min("src").as("node")).filter(col("node").isNotNull)
-    val d1 = Bfs.distancesPre(e, seed, maxDepth, broadcastFrontier = true)
+    val d1 = Bfs.distancesPre(e, seed, maxDepth)
     val farRow = d1.orderBy(col("dist").desc, col("node")).limit(1).collect()
     if (farRow.isEmpty) {
       // empty edge frame: empty profile, not a crash
       Seq.empty[(Long, Long)].toDF("dist", "n_nodes")
     } else {
-      val d2 = Bfs.distancesPre(e, Seq(farRow(0).getLong(0)).toDF("node"),
-        maxDepth, broadcastFrontier = true)
+      val d2 = Bfs.distancesPre(e, Seq(farRow(0).getLong(0)).toDF("node"), maxDepth)
       d2.groupBy("dist").agg(count(lit(1)).as("n_nodes")).orderBy("dist")
     }
   }

@@ -39,31 +39,26 @@ object Hierarchy {
     * is NULL. Every non-root's parent must exist as an id; depth is the
     * number of edges to the root. */
   def rootAndDepth(nodes: DataFrame, idCol: String, parentCol: String,
-                   maxRounds: Int = 40,
-                   broadcastState: Boolean = true): DataFrame = {
-    // broadcastState = false drops the per-round broadcast hints for
-    // forests whose node set outgrows driver/executor memory — the
-    // self-join then shuffles both sides (AQE-sizable), bit-identical
-    // results (HierarchySpec pins the fallback path).
+                   maxRounds: Int = 40): DataFrame = {
     val isRoot = col(parentCol).isNull || col(parentCol) === col(idCol)
     var state = Iterate.materialize(nodes.select(
         col(idCol).cast("long").as("id"),
         when(isRoot, col(idCol).cast("long"))
           .otherwise(col(parentCol).cast("long")).as("anc"),
         when(isRoot, lit(0L)).otherwise(lit(1L)).as("d")))
+    // the inner join below only drops rows, so the initial count bounds
+    // the state of every round (and is the node count the loss check
+    // needs)
+    val nodeCount = state.count()
 
     var round = 0
     var moving = 1L
     while (moving > 0 && round < maxRounds) {
-      // broadcast the hop side (the [[PageRank]] broadcastRanks
-      // precedent — AQE cannot size a mid-loop checkpointed table, so
+      // broadcast the hop side through [[Iterate.broadcastIfSmall]]:
       // the self-join otherwise exchanges the state on BOTH sides every
-      // round; the state is node-sized, and a graph too large for it
-      // degrades gracefully by dropping the hint) — r12 optimization
-      // round, guide §2.4
-      val hop0 = state.select(col("id").as("anc"),
-        col("anc").as("anc2"), col("d").as("d2"))
-      val hop = if (broadcastState) broadcast(hop0) else hop0
+      // round — r12 optimization round, guide §2.4
+      val hop = Iterate.broadcastIfSmall(state.select(col("id").as("anc"),
+        col("anc").as("anc2"), col("d").as("d2")), nodeCount)
       // Iterate.materialize, not bare localCheckpoint: this is a
       // SELF-join loop, so carried size estimates would square per
       // round (see Iterate scaladoc)
@@ -85,7 +80,7 @@ object Hierarchy {
     require(badAnc == 0,
       s"Hierarchy.rootAndDepth: not converged — $badAnc nodes' ancestor " +
         "chains never reach a root (cycle in parent pointers)")
-    val lost = nodes.count() - state.count()
+    val lost = nodeCount - state.count()
     require(lost == 0,
       s"Hierarchy.rootAndDepth: $lost nodes lost to parent ids that are " +
         "not themselves nodes")
@@ -124,19 +119,7 @@ object Hierarchy {
     * self-ancestor pair. Parents that are not themselves nodes raise
     * rather than silently acting as virtual roots. All-integer. */
   def subtreeAgg(nodes: DataFrame, idCol: String, parentCol: String,
-                 valCol: String, maxRounds: Int = 40,
-                 broadcastJumps: Boolean = true): DataFrame = {
-    // broadcastJumps = false drops the per-round broadcast hints (see
-    // rootAndDepth — the live-pointer set is node-bounded but a caller
-    // whose forest outgrows memory needs the shuffled fallback). On
-    // top of the flag, the hint AUTO-drops past
-    // [[Bfs.BroadcastFrontierMaxRows]] using the loop's own per-round
-    // jump count (free signal, r13) — both hint sites broadcast the
-    // current jump/j2 set, whose count the convergence check just
-    // computed, so "degrades gracefully" holds without a code edit.
-    def hint(df: DataFrame, rows: Long): DataFrame =
-      if (broadcastJumps && rows <= Bfs.BroadcastFrontierMaxRows)
-        broadcast(df) else df
+                 valCol: String, maxRounds: Int = 40): DataFrame = {
     val isRoot = col(parentCol).isNull || col(parentCol) === col(idCol)
     val n = Iterate.materialize(nodes.select(
       col(idCol).cast("long").as("id"),
@@ -161,19 +144,17 @@ object Hierarchy {
     while (jumpCnt > 0 && rounds < roundBound) {
       rounds += 1
       // jump is node-bounded (one live pointer per non-converged node,
-      // shrinking) — broadcast it into both per-round joins (the
-      // [[PageRank]] broadcastRanks precedent): the self-join stops
-      // exchanging jump twice, and CRUCIALLY the band join stops
-      // shuffling the CLOSURE — the one frame here that grows to
-      // Σ depth(v) rows, which the previous shape re-exchanged every
-      // round (r12 optimization round, guide §2.4). Degrades gracefully
-      // by dropping the hint if a graph's live-pointer set ever
-      // outgrows executor memory.
+      // shrinking) — broadcast it into both per-round joins through
+      // [[Iterate.broadcastIfSmall]] with the convergence check's jump
+      // count: the self-join stops exchanging jump twice, and CRUCIALLY
+      // the band join stops shuffling the CLOSURE — the one frame here
+      // that grows to Σ depth(v) rows, which the previous shape
+      // re-exchanged every round (r12 optimization round, guide §2.4).
       // distance exactly 2^rounds
       val j2 = Iterate.materialize(
         jump.select(col("desc"), col("anc").as("mid"))
-          .join(hint(jump.select(col("desc").as("mid"), col("anc")),
-              jumpCnt),
+          .join(Iterate.broadcastIfSmall(
+              jump.select(col("desc").as("mid"), col("anc")), jumpCnt),
             "mid")
           .select("desc", "anc"))
       jumpCnt = j2.count()
@@ -181,7 +162,8 @@ object Hierarchy {
         // new band [2^rounds, 2^{rounds+1}) = j2 ∘ (id ∪ clo-so-far);
         // unique binary decomposition ⇒ no duplicates, no distinct
         val band = j2.unionByName(
-          hint(j2.select(col("desc"), col("anc").as("mid")), jumpCnt)
+          Iterate.broadcastIfSmall(
+              j2.select(col("desc"), col("anc").as("mid")), jumpCnt)
             .join(clo.select(col("desc").as("mid"), col("anc")), "mid")
             .select("desc", "anc"))
         clo = Iterate.materialize(clo.unionByName(band))

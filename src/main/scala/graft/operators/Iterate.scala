@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
 
 /** Lineage AND statistics hygiene for iterative DataFrame algorithms.
   *
@@ -23,6 +24,13 @@ import org.apache.spark.sql.DataFrame
   * consumer over the cached blocks — linear, partition-parallel, and
   * noise next to the joins it sits between; AQE re-plans joins from
   * REAL runtime sizes, so losing the (exploded) estimate costs nothing.
+  *
+  * The same reset is why AQE cannot size a node-sized table that
+  * changes every round (a frontier, a rank or label table, a pointer
+  * set): its LogicalRDD carries only default stats, so the join would
+  * exchange and sort the big side every round. [[broadcastIfSmall]] is
+  * the one place the iterative operators decide to broadcast such a
+  * table, from a row count the loop already holds.
   */
 object Iterate {
 
@@ -33,5 +41,24 @@ object Iterate {
     val cp = df.localCheckpoint()
     cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
   }
+
+  /** Ceiling for [[broadcastIfSmall]]: a table above this many rows
+    * takes the shuffled join instead of being collected to the driver.
+    * Size it by the widest frame under it: `Hierarchy.rootAndDepth`'s
+    * hop row (anc, anc2, d2) carries three longs. A broadcast hash
+    * relation holds such a row as a 32-byte UnsafeRow (null word +
+    * three longs) plus roughly 16 bytes of hash-index entry, ≈ 48 B,
+    * so 10M rows is ≈ 480 MB per built relation — held on the driver
+    * while it builds and again on every executor. That is still under
+    * the 8 GB / 512M-row broadcast cap; results are identical on either
+    * path (each operator's spec pins the hint-free form). */
+  val BroadcastMaxRows = 10000000L
+
+  /** `df` with a broadcast hint when `rows <= BroadcastMaxRows`, else
+    * `df` unchanged (AQE then plans the join from runtime sizes).
+    * `rows` must be an upper bound on the row count of `df` — a count
+    * the loop already takes, never a fresh job per round. */
+  def broadcastIfSmall(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= BroadcastMaxRows) broadcast(df) else df
 
 }

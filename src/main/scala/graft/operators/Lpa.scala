@@ -12,13 +12,11 @@ import org.apache.spark.sql.functions._
   * Scale design: per round, ONE edge⋈labels equi-join + one
   * (node, label) count + one per-node argmax — all hashed on node ids,
   * cost O(|E|) per round, `rounds` rounds total. The node-sized label
-  * table is broadcast into the edge join when `broadcastLabels` is set
-  * (default): AQE cannot size a mid-loop table, and shipping the label
-  * map to the edge partitions avoids re-shuffling the (bigger) edge
-  * list every round — same reasoning as [[PageRank.ranks]]; turn it
-  * off for billion-node graphs where the label table exceeds executor
-  * memory. Round state is re-materialized via [[Iterate.materialize]]
-  * (self-referential loop — lineage + stats hygiene).
+  * table goes into the edge join through [[Iterate.broadcastIfSmall]]
+  * with the initial label count, so the (bigger) edge list is not
+  * re-shuffled every round. Round state is re-materialized via
+  * [[Iterate.materialize]] (self-referential loop — lineage + stats
+  * hygiene).
   *
   * Determinism: plain LPA is notoriously order-dependent; this variant
   * is exact and engine-independent because (a) rounds are synchronous
@@ -37,8 +35,7 @@ object Lpa {
     * undirected graph `edges` ("src", "dst" — feed both directions).
     * Self-loops dropped, parallel edges collapsed; isolated nodes
     * never appear (an edge list carries no degree-0 nodes). */
-  def communities(edges: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true): DataFrame = {
+  def communities(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val e = Iterate.materialize(
       edges.select(col("src").cast("long").as("src"),
@@ -48,10 +45,13 @@ object Lpa {
     var labels = Iterate.materialize(
       e.select(col("src").as("node")).distinct()
         .withColumn("label", col("node")))
+    // later rounds label a subset of these nodes (each src's argmax);
+    // an RDD count is one job, Dataset.count under AQE is two
+    val nodeCount = labels.rdd.count()
     for (_ <- 1 to rounds) {
-      val lbl = labels.select(col("node").as("dst"), col("label"))
       val counts = e
-        .join(if (broadcastLabels) broadcast(lbl) else lbl, "dst")
+        .join(Iterate.broadcastIfSmall(
+          labels.select(col("node").as("dst"), col("label")), nodeCount), "dst")
         .groupBy(col("src").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
       // ord is unique per (node, label) row -> max_by is deterministic

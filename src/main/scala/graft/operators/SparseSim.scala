@@ -52,6 +52,9 @@ object SparseSim {
           size(col("ps")) - col("i") - lit(1))).as("pb"))
       .select(col("pa.id").as("id_a"), col("pb.id").as("id_b"),
         score(col("pa.tf"), col("pb.tf")).as("_s"))
+      // id-ascending lists already give id_a < id_b; a duplicated
+      // (id, term) row would pair an id with itself
+      .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(sum(col("_s")).as("_score"))
   }
 

@@ -27,17 +27,9 @@ object Sssp {
 
   /** Exact shortest weighted distances from `sources` ("node") over
     * directed `edges` ("src", "dst", "w") — feed both directions for an
-    * undirected graph. Returns (node, dist); dist = 0 for sources.
-    *
-    * `broadcastFrontier` (default true) forces the per-round frontier
-    * broadcast described below. Bellman–Ford frontiers can GROW toward
-    * |V| mid-search on weighted graphs, so callers whose graphs may
-    * outgrow driver/executor memory must pass false — the join then
-    * stays a plain node-keyed shuffle (AQE-sizable), bit-identical
-    * results (SsspSpec pins the fallback path). */
+    * undirected graph. Returns (node, dist); dist = 0 for sources. */
   def shortestPaths(edges: DataFrame, sources: DataFrame,
-                    maxRounds: Int = 60,
-                    broadcastFrontier: Boolean = true): DataFrame = {
+                    maxRounds: Int = 60): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .groupBy("src", "dst").agg(min(col("w")).as("w"))
@@ -47,12 +39,10 @@ object Sssp {
         "relaxation requires w >= 0 to terminate at shortest distances)")
     // State is ONE frame (node, dist, _imp): _imp = 1 marks rows whose
     // distance improved last round (the live frontier). Each round
-    // broadcasts the frontier into the edge join (the [[PageRank]]
-    // broadcastRanks precedent — AQE cannot size a mid-loop
-    // checkpointed table, so without the hint every round re-exchanges
-    // and re-sorts the FULL edge list; a frontier is node-bounded, and
-    // graphs whose frontier exceeds executor memory degrade gracefully
-    // by dropping the hint), then ONE node-keyed aggregation merges
+    // broadcasts the frontier into the edge join through
+    // [[Iterate.broadcastIfSmall]] with the loop's own frontier count
+    // (Bellman–Ford frontiers can grow toward |V| mid-search, exactly
+    // the cliff its ceiling guards), then ONE node-keyed aggregation merges
     // candidates with the previous distances: min(d) over both is the
     // relaxed distance, and min(d | old rows) recovers the previous
     // value so the improvement flag needs no join-back. One exchange +
@@ -67,15 +57,9 @@ object Sssp {
     var improving = state.filter(col("_imp") === 1L).count()
     while (improving > 0 && round < maxRounds) {
       round += 1
-      val fr0 = state.filter(col("_imp") === 1L)
+      val fr = state.filter(col("_imp") === 1L)
         .select(col("node").as("src"), col("dist"))
-      // auto-fallback on the loop's own frontier count (free signal):
-      // Bellman–Ford frontiers grow toward |V| mid-search, so past
-      // [[Bfs.BroadcastFrontierMaxRows]] the hint is dropped at
-      // runtime — identical results, shuffled path spec-pinned
-      val fr = if (broadcastFrontier && improving <= Bfs.BroadcastFrontierMaxRows)
-        broadcast(fr0) else fr0
-      val cand = fr.join(e, "src")
+      val cand = Iterate.broadcastIfSmall(fr, improving).join(e, "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("d"),
           lit(0L).as("_old"))
       state = Iterate.materialize(

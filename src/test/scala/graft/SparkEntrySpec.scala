@@ -96,4 +96,32 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"${offenders.size} specs build their own session: ${offenders.mkString(", ")}")
   }
+
+  test("every plans/ file cited in OPTIMIZATION_r*.md exists") {
+    // A citation may brace-list alternatives (q_{before,after}.txt) and
+    // wrap across lines inside the braces; <q>-style placeholders are
+    // prose, not citations, and never match.
+    import java.nio.file._
+    import scala.jdk.CollectionConverters._
+    def expand(s: String): Seq[String] = {
+      val open = s.indexOf('{')
+      if (open < 0) Seq(s)
+      else {
+        val close = s.indexOf('}', open)
+        s.substring(open + 1, close).split(',').toSeq.flatMap(alt =>
+          expand(s.substring(0, open) + alt.trim + s.substring(close + 1)))
+      }
+    }
+    val cite = """plans/(?:[\w./-]|\{[^{}<>]*\})+\.txt""".r
+    val docs = Files.list(Paths.get(".")).iterator().asScala
+      .filter(_.getFileName.toString.matches("OPTIMIZATION_r.*\\.md")).toSeq.sortBy(_.toString)
+    assert(docs.nonEmpty)
+    val missing = for {
+      doc <- docs
+      m <- cite.findAllIn(Files.readString(doc)).toSeq
+      path <- expand(m)
+      if !Files.exists(Paths.get(path))
+    } yield s"${doc.getFileName}: $path"
+    assert(missing.isEmpty, s"cited plan files missing: ${missing.mkString(", ")}")
+  }
 }

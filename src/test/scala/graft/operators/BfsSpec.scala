@@ -103,6 +103,11 @@ class BfsSpec extends AnyFunSuite {
     val got = Bfs.landmarkDistances(edges, seeds.toDF("node"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got === expect)
+    val plain = NoBroadcast(spark) {
+      Bfs.landmarkDistances(edges, seeds.toDF("node"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    }
+    assert(plain === expect)
   }
 
   test("depth-200 chain at maxDepth=250: bounded plan depth via periodic compaction") {

@@ -66,15 +66,17 @@ class HierarchySpec extends AnyFunSuite {
       .toDF("id", "parent", "v")
     val rdHint = Hierarchy.rootAndDepth(nodes, "id", "parent")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val rdPlain = Hierarchy.rootAndDepth(nodes, "id", "parent",
-        broadcastState = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val rdPlain = NoBroadcast(spark) {
+      Hierarchy.rootAndDepth(nodes, "id", "parent")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
     assert(rdPlain === rdHint)
     val saHint = Hierarchy.subtreeAgg(nodes, "id", "parent", "v")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val saPlain = Hierarchy.subtreeAgg(nodes, "id", "parent", "v",
-        broadcastJumps = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val saPlain = NoBroadcast(spark) {
+      Hierarchy.subtreeAgg(nodes, "id", "parent", "v")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
     assert(saPlain === saHint)
   }
 

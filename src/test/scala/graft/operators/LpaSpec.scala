@@ -60,6 +60,8 @@ class LpaSpec extends AnyFunSuite {
         .filter(p => p._1 != p._2)
       val rounds = 1 + rnd.nextInt(4)
       assert(run(pairs, rounds) === ref(pairs, rounds), s"trial=$trial rounds=$rounds")
+      assert(NoBroadcast(spark)(run(pairs, rounds)) === ref(pairs, rounds),
+        s"hint-free trial=$trial rounds=$rounds")
     }
   }
 

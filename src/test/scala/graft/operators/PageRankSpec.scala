@@ -55,5 +55,10 @@ class PageRankSpec extends AnyFunSuite {
     assert(got == reference(edges, 3))
     // ranks genuinely differentiated (not all base / all scale)
     assert(got.values.toSet.size > 5)
+    val plain = NoBroadcast(spark) {
+      PageRank.ranks(edges.toDF("src", "dst"), iters = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
+    assert(plain == got)
   }
 }

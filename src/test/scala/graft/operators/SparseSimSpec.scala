@@ -30,6 +30,15 @@ class SparseSimSpec extends AnyFunSuite {
     assert(got === Map((1L, 2L) -> ((1L, 2L, 2L))))
   }
 
+  test("cosineComponentsOfTf: a duplicated (id, term) row never pairs an id with itself") {
+    // breaks the one-row-per-(id, term) contract: id 1 appears twice in
+    // term a's posting list
+    val got = runTf(Seq((1L, "a", 1L), (1L, "a", 1L), (2L, "a", 1L)),
+      maxDf = 10L, minDot = 1L)
+    assert(got.nonEmpty)
+    assert(got.keys.forall { case (a, b) => a < b }, got)
+  }
+
   test("cosineComponents (text): bigram terms, hand case") {
     import spark.implicits._
     // doc 1 "a b a b": bigrams {a b: 2, b a: 1}; doc 2 "a b b": {a b: 1, b b: 1}

@@ -62,13 +62,14 @@ class SsspSpec extends AnyFunSuite {
     }
   }
 
-  test("broadcastFrontier=false (shuffled fallback) is bit-identical") {
+  test("hint-free (shuffled fallback) run is bit-identical") {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(160)(
       (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong, rnd.nextInt(9).toLong + 1))
-    val plain = Sssp.shortestPaths(edges.toDF("src", "dst", "w"),
-        Seq(0L, 1L).toDF("node"), 60, broadcastFrontier = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val plain = NoBroadcast(spark) {
+      Sssp.shortestPaths(edges.toDF("src", "dst", "w"), Seq(0L, 1L).toDF("node"), 60)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(plain === dijkstra(edges, Seq(0L, 1L)))
   }
 

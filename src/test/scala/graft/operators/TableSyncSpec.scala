@@ -77,6 +77,26 @@ class TableSyncSpec extends AnyFunSuite {
     }
   }
 
+  test("syncDiff: a NULL-keyed row on both sides becomes one U or no row") {
+    import spark.implicits._
+    // the documented contract for NULL keys (the row recovery groups by
+    // the key, which unifies NULLs): never the D + I pair a SQL full
+    // outer join on `=` would give
+    def snap(rows: Seq[(Option[Long], Long, Long)]) = rows.toDF("k", "v1", "v2")
+    val oldRows = Seq((None, 1L, 1L), (Some(1L), 1L, 1L), (Some(2L), 2L, 2L))
+    for (nullPayload <- Seq((1L, 1L), (5L, 1L))) {
+      val newRows = Seq((None, nullPayload._1, nullPayload._2),
+        (Some(1L), 9L, 1L), (Some(2L), 2L, 2L))
+      val got = TableSync.syncDiff(snap(oldRows), snap(newRows), keyH, rowH, 4,
+          Seq("k"), Seq("v1", "v2"))
+        .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getString(1))
+      val nullRows = got.filter(_._1.isEmpty).map(_._2)
+      assert(nullRows.length <= 1 && nullRows.forall(_ == "U"),
+        s"payload $nullPayload: ${got.mkString(", ")}")
+      assert(got.filter(_._1.nonEmpty).toSet === Set(Some(1L) -> "U"))
+    }
+  }
+
   test("identical snapshots: no dirty buckets, empty diff") {
     val rows = (1L to 300L).map(k => (k, k, k))
     assert(TableSync.dirtyBuckets(
