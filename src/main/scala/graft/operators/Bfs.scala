@@ -71,7 +71,7 @@ object Bfs {
         .withColumn("dist", lit(0L)))
     var frontier = dist.select("node")
     var depth = 0L
-    var frontierSize = frontier.count()
+    var frontierSize = frontier.rdd.count()
     while (frontierSize > 0 && depth < maxDepth) {
       depth += 1
       // Iterate.materialize keeps the carried size estimates (and
@@ -87,7 +87,7 @@ object Bfs {
           .unionByName(dist.select(col("node"), lit(1L).as("_vis")))
           .groupBy("node").agg(max(col("_vis")).as("_vis"))
           .filter(col("_vis") === 0L).select("node"))
-      frontierSize = next.count()
+      frontierSize = next.rdd.count()
       if (frontierSize > 0) {
         // the visited set stays a LAZY union of the already-materialized
         // frontiers — no recompute risk, no extra job per round —
@@ -130,7 +130,7 @@ object Bfs {
         .select(col("node"), col("node").as("seed"), lit(0L).as("dist")))
     var frontier = dist.select("node", "seed")
     var depth = 0L
-    var frontierSize = frontier.count()
+    var frontierSize = frontier.rdd.count()
     while (frontierSize > 0 && depth < maxDepth) {
       depth += 1
       val next = Iterate.materialize(
@@ -141,7 +141,7 @@ object Bfs {
             lit(1L).as("_vis")))
           .groupBy("node", "seed").agg(max(col("_vis")).as("_vis"))
           .filter(col("_vis") === 0L).select("node", "seed"))
-      frontierSize = next.count()
+      frontierSize = next.rdd.count()
       if (frontierSize > 0) {
         dist = dist.unionByName(next.withColumn("dist", lit(depth)))
         if (depth % CheckpointEvery == 0) dist = Iterate.materialize(dist)

@@ -49,7 +49,7 @@ object Hierarchy {
     // the inner join below only drops rows, so the initial count bounds
     // the state of every round (and is the node count the loss check
     // needs)
-    val nodeCount = state.count()
+    val nodeCount = state.rdd.count()
 
     var round = 0
     var moving = 1L
@@ -65,7 +65,7 @@ object Hierarchy {
       val next = Iterate.materialize(state.join(hop, "anc")
         .select(col("id"), col("anc2").as("anc"), (col("d") + col("d2")).as("d"),
           (col("anc2") =!= col("anc")).cast("long").as("_moved")))
-      moving = next.agg(sum("_moved")).head().getLong(0)
+      moving = next.filter(col("_moved") === 1L).rdd.count()
       state = next.drop("_moved")
       round += 1
     }
@@ -80,7 +80,7 @@ object Hierarchy {
     require(badAnc == 0,
       s"Hierarchy.rootAndDepth: not converged — $badAnc nodes' ancestor " +
         "chains never reach a root (cycle in parent pointers)")
-    val lost = nodeCount - state.count()
+    val lost = nodeCount - state.rdd.count()
     require(lost == 0,
       s"Hierarchy.rootAndDepth: $lost nodes lost to parent ids that are " +
         "not themselves nodes")
@@ -135,12 +135,12 @@ object Hierarchy {
         .select(col("id").as("desc"), col("par").as("anc")))
     var clo = jump // pairs at distance in [1, 2)
     var rounds = 0
-    var jumpCnt = jump.count()
+    var jumpCnt = jump.rdd.count()
     // in a true forest depth ≤ |nodes|, so jumps empty within
     // ⌈log₂ n⌉ + 1 rounds — a cycle (which keeps jumps alive forever)
     // is caught right after that bound instead of spinning to maxRounds
     val roundBound = math.min(maxRounds.toLong,
-      64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n.count())) + 1)
+      64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n.rdd.count())) + 1)
     while (jumpCnt > 0 && rounds < roundBound) {
       rounds += 1
       // jump is node-bounded (one live pointer per non-converged node,
@@ -157,7 +157,7 @@ object Hierarchy {
               jump.select(col("desc").as("mid"), col("anc")), jumpCnt),
             "mid")
           .select("desc", "anc"))
-      jumpCnt = j2.count()
+      jumpCnt = j2.rdd.count()
       if (jumpCnt > 0) {
         // new band [2^rounds, 2^{rounds+1}) = j2 ∘ (id ∪ clo-so-far);
         // unique binary decomposition ⇒ no duplicates, no distinct

@@ -36,7 +36,9 @@ object Iterate {
 
   /** Checkpoint one iteration's state and reset its carried statistics.
     * Use as the per-round boundary of every iterative join loop; for a
-    * SELF-joining loop it is mandatory (see scaladoc). */
+    * SELF-joining loop it is mandatory (see scaladoc). Count the result
+    * with `.rdd.count()`: one job over the cached blocks, where
+    * `Dataset.count()` under AQE runs a map-stage job plus a final one. */
   def materialize(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
     cp.sparkSession.createDataFrame(cp.rdd, cp.schema)

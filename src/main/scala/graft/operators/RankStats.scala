@@ -123,7 +123,16 @@ object RankStats {
     * Plan: one stratum-partitioned rank window + a (stratum, value)
     * count window over the same exchange, a (stratum, group) agg, and
     * a distinct-value-sized tie agg — no global window, no pairwise
-    * term. */
+    * term.
+    *
+    * Declined (r13): the two-level banded scan of
+    * `Robust.weightedMedian` would spread the stratum-partitioned rank
+    * window over more tasks. Not adopted: q296 runs in under 0.9 s at
+    * sf0.1 on its 2–5-partition window, and the same rewrite measured
+    * flat on q174 locally (1.920 vs 1.934 s) because so few groups at
+    * this size do not serialize enough work to matter
+    * (OPTIMIZATION_r13.md, checklist). Revisit when a profile shows this
+    * window's tasks dominating a wall time. */
   def kruskalWallis(df: DataFrame, strataCol: String, grpCol: String,
                     valCol: String): DataFrame = {
     val pooled = df

@@ -169,7 +169,16 @@ object Robust {
     * counts joins back by BROADCAST on (grp, rank) — the ranked frame
     * is scanned once and never re-shuffled. Duplicate ranks can't
     * occur (row_number is a bijection), so the join emits exactly one
-    * row per (grp, j). */
+    * row per (grp, j).
+    *
+    * Declined (r13): [[weightedMedian]]'s two-level banded scan (scan
+    * within (group, value-band), then broadcast the per-band offsets)
+    * would spread this group-partitioned rank window over more tasks.
+    * Not adopted: q188 runs in under 0.9 s at sf0.1 on its 2–5-partition
+    * window, and the same rewrite measured flat on q174 locally (1.920
+    * vs 1.934 s) because 3 groups at this size do not serialize enough
+    * work to matter (OPTIMIZATION_r13.md, checklist). Revisit when a
+    * profile shows this window's tasks dominating a wall time. */
   def equiDepthBounds(df: DataFrame, grpCol: String, valCol: String,
                       idCol: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 1000, "k: 1..1000")

@@ -54,7 +54,7 @@ object Sssp {
       sources.select(col("node").cast("long").as("node")).distinct()
         .select(col("node"), lit(0L).as("dist"), lit(1L).as("_imp")))
     var round = 0
-    var improving = state.filter(col("_imp") === 1L).count()
+    var improving = state.filter(col("_imp") === 1L).rdd.count()
     while (improving > 0 && round < maxRounds) {
       round += 1
       val fr = state.filter(col("_imp") === 1L)
@@ -71,7 +71,7 @@ object Sssp {
           .select(col("node"), col("dist"),
             (col("_oldd").isNull || col("dist") < col("_oldd"))
               .cast("long").as("_imp")))
-      improving = state.filter(col("_imp") === 1L).count()
+      improving = state.filter(col("_imp") === 1L).rdd.count()
     }
     require(improving == 0,
       s"Sssp.shortestPaths: distances still improving after $maxRounds " +

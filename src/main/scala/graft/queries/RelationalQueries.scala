@@ -327,13 +327,23 @@ object RelationalQueries {
     },
 
     // HLL sketch count-distinct — the 100 TB cardinality tool (exact
-    // countDistinct shuffles all distinct values; the sketch is O(1)
-    // memory per partition). Estimates are engine-specific, so the oracle
-    // gates a TOLERANCE: the Spark side emits `abs(approx-exact) <=
-    // 0.05*exact` per group as a 0/1 flag, the DuckDB side recomputes the
-    // exact cardinalities and asserts the flag is literally 1 — a hash
-    // match means the sketch met its error bound against an independently
-    // computed truth. (Unit-level ≤5% assertions also live in ApproxSpec.)
+    // countDistinct shuffles all distinct values; the sketch is one
+    // fixed-size register buffer per group). Estimates are
+    // engine-specific, so the oracle gates a TOLERANCE: the Spark side
+    // emits `abs(approx-exact) <= 0.05*exact` per group as a 0/1 flag,
+    // the DuckDB side recomputes the exact cardinalities and asserts the
+    // flag is literally 1 — a hash match means the sketch met its error
+    // bound against an independently computed truth. (Unit-level ≤5%
+    // assertions also live in ApproxSpec.)
+    //
+    // The exact and sketch aggregates are TWO groupBys joined on the
+    // flag. In one groupBy Spark plans the distinct aggregates in two
+    // phases keyed by (flag, distinct value), and every first-phase
+    // group carries both 4,096-register HLL buffers (~39k groups at
+    // sf0.01): 2,829 ms against 158 ms under count() on perfbench
+    // inputs, ~34 s at sf0.1 (4-core VM). HLL registers max-merge, so
+    // the split leaves the estimates unchanged. GlobalPlanAuditSpec
+    // lints the one-groupBy shape across all queries.
     QueryDef.sql("q55_approx_distinct",
       """SELECT l_returnflag,
         |  count(DISTINCT l_partkey) AS exact_parts,
@@ -341,13 +351,14 @@ object RelationalQueries {
         |  CAST(1 AS BIGINT) AS parts_within_5pct,
         |  CAST(1 AS BIGINT) AS orders_within_5pct
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-      lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(
-          countDistinct(col("l_partkey")).as("exact_parts"),
-          approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"),
-          countDistinct(col("l_orderkey")).as("exact_orders"),
-          approx_count_distinct(col("l_orderkey"), 0.02).as("approx_orders"))
+      val li = lineitem(s, d)
+      val exact = li.groupBy("l_returnflag").agg(
+        countDistinct(col("l_partkey")).as("exact_parts"),
+        countDistinct(col("l_orderkey")).as("exact_orders"))
+      val approx = li.groupBy(col("l_returnflag").as("_flag")).agg(
+        approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"),
+        approx_count_distinct(col("l_orderkey"), 0.02).as("approx_orders"))
+      exact.join(approx, col("l_returnflag") <=> col("_flag"))
         .select(
           col("l_returnflag"), col("exact_parts"), col("exact_orders"),
           (abs(col("approx_parts") - col("exact_parts")).cast("double") <=
@@ -357,7 +368,9 @@ object RelationalQueries {
         .orderBy("l_returnflag")
     },
 
-    // exact interpolated percentiles (continuous quantiles)
+    // exact interpolated percentiles (continuous quantiles): both from
+    // ONE percentile buffer per group (an array of percentages), not
+    // one buffer of every value per percentage
     QueryDef.sql("q56_percentile",
       """SELECT l_returnflag,
         |  quantile_cont(l_extendedprice, 0.5) AS p50,
@@ -365,9 +378,9 @@ object RelationalQueries {
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
       lineitem(s, d)
         .groupBy("l_returnflag")
-        .agg(
-          expr("percentile(l_extendedprice, 0.5)").as("p50"),
-          expr("percentile(l_extendedprice, 0.9)").as("p90"))
+        .agg(expr("percentile(l_extendedprice, array(0.5, 0.9))").as("_p"))
+        .select(col("l_returnflag"), col("_p")(0).as("p50"),
+          col("_p")(1).as("p90"))
         .orderBy("l_returnflag")
     },
 

@@ -130,6 +130,95 @@ class GlobalPlanAuditSpec extends AnyFunSuite {
       s"q07 5-way chain shows no broadcast join:\n${plan.take(2000)}")
   }
 
+  /** q55's 18× full-row cliff, machine-checked: an Aggregate that holds
+    * a DISTINCT aggregate beside a non-distinct ImperativeAggregate —
+    * HLL++, percentile, percentile_approx, collect_*, or a graft sketch
+    * (every one a TypedImperativeAggregate). Spark plans the distinct
+    * aggregate in two phases keyed by (keys, distinct value), and every
+    * first-phase group carries the imperative buffer, so a 4,096-register
+    * sketch is built once per distinct value instead of once per key.
+    * The shape shows in the optimized plan in two forms:
+    *  - before the rewrite: with ONE distinct group
+    *    RewriteDistinctAggregates leaves the Aggregate as is (the planner
+    *    splits it), so it still holds both kinds of aggregate;
+    *  - after it: with two or more, the rule puts an Expand under a
+    *    first-phase Aggregate grouped by (keys, distinct values, `gid`)
+    *    that evaluates the regular aggregates. ROLLUP / CUBE / GROUPING
+    *    SETS also build an Expand, but their group id is
+    *    `spark_grouping_id` and each of their groups is a real output
+    *    group (q58), so only the rewrite's `gid` marks the shape.
+    * The fix is two groupBys joined on the keys (q55). */
+  private def distinctBesideSketchOffenders(plan: LogicalPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{
+      AggregateExpression, ImperativeAggregate}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand}
+    def aggs(a: Aggregate) = a.aggregateExpressions.flatMap(
+      _.collect { case ae: AggregateExpression => ae })
+    def sketches(a: Aggregate) = aggs(a).collect {
+      case ae if !ae.isDistinct &&
+        ae.aggregateFunction.isInstanceOf[ImperativeAggregate] =>
+        ae.aggregateFunction.prettyName
+    }
+    def distinctRewrite(a: Aggregate) = a.child match {
+      case e: Expand => a.groupingExpressions.exists {
+        case r: AttributeReference =>
+          r.name == "gid" && e.producedAttributes.contains(r)
+        case _ => false
+      }
+      case _ => false
+    }
+    plan.collect {
+      case a: Aggregate if sketches(a).nonEmpty &&
+          aggs(a).exists(_.isDistinct) =>
+        s"distinct aggregate beside ${sketches(a).distinct.mkString(", ")}"
+      case a: Aggregate if sketches(a).nonEmpty && distinctRewrite(a) =>
+        s"distinct-rewrite Expand feeding ${sketches(a).distinct.mkString(", ")}"
+    }
+  }
+
+  /** Queries allowed the shape above. Every entry needs a measured
+    * reason (the full-row time of the split form against this one). */
+  private val IntendedDistinctBesideSketch = Map.empty[String, String]
+
+  test("no distinct aggregate shares an Aggregate with an imperative sketch") {
+    val offenders = optimized.toSeq.flatMap { case (name, plan) =>
+      if (IntendedDistinctBesideSketch.contains(name)) Nil
+      else distinctBesideSketchOffenders(plan).map(o => s"$name: $o")
+    }
+    assert(offenders.isEmpty,
+      "split the exact and sketch aggregates into two groupBys joined on " +
+        s"the keys (q55):\n  ${offenders.sorted.mkString("\n  ")}")
+  }
+
+  test("the distinct-beside-sketch detector fires on a deliberate regression") {
+    import org.apache.spark.sql.functions._
+    val t = spark.range(200).select((col("id") % 3).as("k"),
+      (col("id") % 17).as("a"), (col("id") % 29).as("b"))
+    def hits(df: org.apache.spark.sql.DataFrame) =
+      distinctBesideSketchOffenders(df.queryExecution.optimizedPlan)
+    val oneDistinct = t.groupBy("k").agg(countDistinct(col("a")),
+      approx_count_distinct(col("a")))
+    assert(hits(oneDistinct).exists(_.startsWith("distinct aggregate")),
+      "detector missed the one-distinct form")
+    // two distinct groups: the rewrite's Expand form, nothing distinct left
+    val twoDistinct = t.groupBy("k").agg(countDistinct(col("a")),
+      countDistinct(col("b")), approx_count_distinct(col("a")))
+    assert(hits(twoDistinct).exists(_.startsWith("distinct-rewrite")),
+      "detector missed the two-distinct (Expand) form")
+    val split = t.groupBy("k").agg(countDistinct(col("a")),
+        countDistinct(col("b")))
+      .join(t.groupBy(col("k").as("_k")).agg(approx_count_distinct(col("a"))),
+        col("k") <=> col("_k"))
+    assert(hits(split).isEmpty, s"split form flagged: ${hits(split)}")
+    // the two-distinct form without a sketch is the rewrite alone, and a
+    // ROLLUP's Expand feeding a percentile is a grouping-sets plan
+    assert(hits(t.groupBy("k").agg(countDistinct(col("a")),
+      countDistinct(col("b")), sum(col("a")))).isEmpty)
+    assert(hits(t.rollup("k", "a").agg(
+      expr("percentile(b, 0.5)"))).isEmpty)
+  }
+
   /** The 700s-CPU-at-500-rows bug class (CLAUDE.md ground rule;
     * Dedup.minhashSigOf scaladoc), machine-checked: an interpreted
     * higher-order function re-evaluates a CAPTURED non-attribute
