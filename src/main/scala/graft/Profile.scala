@@ -14,6 +14,14 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * signal that partition-count / round-count levers (guide §2) apply,
   * not expression tuning (guide §4).
   *
+  * Each query runs twice and both passes print. For most queries pass 2
+  * is the warm one to read. Queries that memoize a stage through
+  * `Aux.share`/`Aux.shareBuilt` differ: pass 1 builds and writes the
+  * memo, and pass 2 only reads the memoized parquet back — at sf0.01,
+  * 3–4 jobs against 36–46 in pass 1 for q112, q124, q146, q163 and q282.
+  * For those, pass 1 is the build: profile an operator they run from
+  * pass 1 of a fresh aux root (-Dgraft.aux.root), never from pass 2.
+  *
   * Usage: SPARK_GRAFT_CPUS=32 runMain graft.Profile <sfDir> q110 q274 ...
   */
 object Profile {
@@ -53,9 +61,9 @@ object Profile {
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) =>
         prefixes.isEmpty || prefixes.exists(n.startsWith) }
-    // two passes: pass 1 warms codegen/footers for these plans, pass 2
-    // is the reported one (mirrors the bench's median-of-passes intent
-    // without the full 5-pass cost)
+    // two passes: pass 1 warms codegen/footers for these plans (and
+    // builds any Aux memo), pass 2 reruns them warm (see the scaladoc
+    // for the Aux.share* queries, whose pass 2 only reads the memo)
     (1 to 2).foreach { pass =>
       named.foreach { case (name, fn) =>
         jobs.set(0); stages.set(0); tasks.set(0)

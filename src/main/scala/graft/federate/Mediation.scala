@@ -3,9 +3,11 @@ package graft.federate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Schema mediation + small federation utilities rounding out the SURVEY
-  * §2 inventory: P1 attribute drop, F5 per-source canonical views, F6
-  * filter composition, S5 offset pagination, D2 ordered distinct.
+/** Small federation utilities rounding out the SURVEY §2 inventory: P1
+  * attribute drop, F6 filter composition, S5 keyset pagination, D2
+  * ordered distinct. (F5's per-provider clause templates are ported as
+  * [[graft.functions.SpaceGroups.spgFilterMap]] and
+  * [[graft.functions.SpaceGroups.bandgapFilterMap]].)
   */
 object Mediation {
 
@@ -26,35 +28,6 @@ object Mediation {
 
   def dropAttrs(df: DataFrame, attrs: Seq[String] = OptimadeDropAttrs): DataFrame =
     df.drop(attrs: _*)
-
-  /** F5 — per-source mediation view: rename provider-specific property
-    * columns to canonical names so ONE predicate serves every source
-    * (replaces the reference's per-provider clause templates,
-    * Optimade_Server/utils.py:550-613). Missing source columns are added
-    * as nulls so unionByName stays total. */
-  def mediate(df: DataFrame, canonicalFrom: Map[String, String]): DataFrame = {
-    val present = df.columns.toSet
-    canonicalFrom.foldLeft(df) { case (acc, (canonical, sourceCol)) =>
-      if (present.contains(sourceCol)) acc.withColumn(canonical, col(sourceCol))
-      else acc.withColumn(canonical, lit(null))
-    }
-  }
-
-  /** The reference's provider property vocabularies for space group and
-    * band gap, as mediation mappings (canonical → provider column). */
-  def providerMediation(provider: String): Map[String, String] = provider match {
-    case "alexandria" => Map("space_group_number" -> "_alexandria_space_group",
-                             "band_gap" -> "_alexandria_band_gap")
-    case "nmd"        => Map("space_group_number" -> "_nmd_dft_spacegroup")
-    case "mpdd"       => Map("space_group_number" -> "_mpdd_spacegroupn")
-    case "odbx"       => Map("space_group_number" -> "_gnome_space_group_it_number",
-                             "band_gap" -> "_gnome_bandgap")
-    case "oqmd"       => Map("space_group_hm" -> "_oqmd_spacegroup",
-                             "band_gap" -> "_oqmd_band_gap")
-    case "tcod"       => Map("space_group_tcod" -> "_tcod_sg")
-    case "cod"        => Map("space_group_tcod" -> "_cod_sg")
-    case _            => Map.empty
-  }
 
   /** F6 — combine a base predicate with a per-source clause:
     * (base) AND (clause) (Optimade_Server/utils.py:615-636). */

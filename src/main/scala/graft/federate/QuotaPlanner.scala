@@ -131,7 +131,4 @@ object QuotaPlanner {
 
     plan.toSeq.map { case (c, us) => c -> us.toSeq }
   }
-
-  /** Plan total. */
-  def planTotal(plan: Plan): Int = plan.flatMap(_._2.map(_._2)).sum
 }

@@ -82,13 +82,15 @@ object DomainFunctions {
     if (cut.isEmpty) "filter" else cut
   }
 
-  /** Long-id display shortening (reference utils.py:208-226):
+  /** Long-id display shortening (reference
+    * optimade_database/Optimade_Server/utils.py:208-226):
     * 'abcdef...xyz' when longer than minLen. */
   def shortenId(id: String, head: Int = 6, tail: Int = 3, minLen: Int = 12): String =
     if (id == null || id.isEmpty || id.length <= minLen) id
     else id.substring(0, head) + "..." + id.substring(id.length - tail)
 
-  /** Provider URL → filesystem-safe name (reference utils.py:208-214). */
+  /** Provider URL → filesystem-safe name (reference
+    * optimade_database/Optimade_Server/utils.py:208-214). */
   def providerNameFromUrl(url: String): String = {
     val u = java.net.URI.create(url)
     val netloc = Option(u.getAuthority).getOrElse("").replace(".", "_")
@@ -108,10 +110,12 @@ object DomainFunctions {
   val LoadingUnits: Set[String] = Set(
     "cm3(STP)/g", "cm3(STP)/cm3", "g/l", "mg/g", "mmol/g", "mol/kg", "wt%")
 
+  /** Pressure-unit check (mofdb_database/mofdb_client/main.py:8-31). */
   def validatePressureUnit(u: String): Either[String, String] =
     if (u == null || PressureUnits.contains(u)) Right(u)
     else Left(s"'$u' is not a valid unit for pressure. Valid pressure units are: ${PressureUnits.toSeq.sorted.mkString(", ")}")
 
+  /** Loading-unit check (mofdb_database/mofdb_client/main.py:8-31). */
   def validateLoadingUnit(u: String): Either[String, String] =
     if (u == null || LoadingUnits.contains(u)) Right(u)
     else Left(s"'$u' is not a valid unit for loading. Valid loading units are: ${LoadingUnits.toSeq.sorted.mkString(", ")}")

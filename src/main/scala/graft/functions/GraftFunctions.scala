@@ -79,7 +79,8 @@ object GraftFunctions {
           transform(speciesAtSites, e => element_at(energyRefCol, e)),
           lit(0.0), (acc, x) => acc + x)) / size(speciesAtSites))
 
-  // F11 — stable run ids: sha1(filter)[:8]
+  /** F11 — stable run ids: sha1(filter)[:8], a port of the reference's
+    * run-id hash (optimade_database/Optimade_Server/server.py:137). */
   def run_id(c: Column): Column = substring(sha1(c), 1, 8)
 
   /** SQL-name registration so `spark.sql` surfaces can call these. */

@@ -123,9 +123,9 @@ object SpaceGroups {
 
   /** Per-provider space-group clause templates
     * (reference optimade_database/Optimade_Server/utils.py:550-573).
-    * In the Spark rebuild these exist for API parity; the engine itself
-    * mediates per-source columns to one canonical `space_group_number`
-    * (SURVEY F5) so a single predicate serves all sources.
+    * Kept as a port of a reference function (no query builds these
+    * clause strings); the filter compiler's `Context.resolve` is where
+    * the engine would map provider property names (SURVEY F5).
     */
   def spgFilterMap(spgNumber: Int, providers: Iterable[String]): Map[String, String] = {
     val hm = fromNumber(spgNumber)

@@ -63,7 +63,9 @@ object CountMin {
   }
 
   /** Build the sketch of `key` over `df`: rows (r INT, bucket BIGINT,
-    * cnt BIGINT), at most seeds.size × w of them. */
+    * cnt BIGINT), at most seeds.size × w of them. Second form kept on
+    * purpose: this plan form serves the batch queries (q109, q289);
+    * [[CountMinAgg]] serves the streaming state (q199). */
   def sketch(df: DataFrame, key: Column, w: Int): DataFrame = {
     val keyed = df.select(key.cast("long").as("_cms_k"))
     val cells = seeds.map(s => bucket(col("_cms_k"), s, w))

@@ -29,6 +29,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * slicing, bit-for-bit. Hashes are [[CountMin.bucketJvm]], asserted ≡
   * the Column chain, so the q199 oracle rebuilds the per-window grid in
   * SQL exactly as q109 does for the batch sketch.
+  * Second form kept on purpose: this buffer serves the streaming state
+  * ([[graft.streaming.SketchStreams.windowedCountMin]], q199); the batch
+  * queries q109 and q289 run [[CountMin.sketch]].
   */
 case class CountMinAgg(
     child: Expression,

@@ -35,14 +35,6 @@ object Curation {
       .filter(col("sample_rank") <= n)
   }
 
-  /** Shuffle-free rate sampling: keep a row iff `md5(id)` sorts below
-    * `hexThreshold` (rate = the hex-prefix mass, e.g. "29" ≈ 0x29/256 ≈
-    * 16%). A pure filter — no shuffle, no state, evaluated at the scan —
-    * which is the form that survives 100 TB: sampling decisions must
-    * never require co-locating anything. */
-  def samplePredicate(idCol: Column, hexThreshold: String): Column =
-    md5(idCol.cast("string")) < lit(hexThreshold)
-
   /** Corpus vocabulary: whitespace token → total occurrences (`tf`) and
     * document frequency (`df_docs`), thresholded at `minTf`. explode →
     * groupBy(token) is the canonical word-count shape: partial (map-
@@ -116,21 +108,17 @@ object Curation {
   /** Leakage-safe fold assignment: a train/eval split that hashes raw
     * ids leaks — two near-duplicate documents can land on opposite
     * sides, and the eval side then scores memorization. Fold by the
-    * near-dup GROUP instead: connected components over the verified
-    * near-dup pairs ([[Dedup.connectedComponents]] — star contraction,
-    * O(log n) rounds), then fold = component min-id mod `folds`, so
-    * every member of a group lands in the same fold by construction.
-    * Output: (id, comp, fold) for every id in a pair; singleton docs
-    * (no pair) are their own group and can be folded by raw id
-    * downstream. All-integer (q119's oracle recomputes the components
-    * by recursive reachability and must agree on every fold count). */
-  def groupAwareFolds(pairs: DataFrame, folds: Int): DataFrame =
-    foldsFromComponents(Dedup.connectedComponents(pairs), folds)
-
-  /** [[groupAwareFolds]] over an already-computed component assignment
-    * (id, comp) — the production shape: the near-dup group map is built
-    * once (and typically persisted; see Aux.share's write-once store)
-    * and fold assignment is a cheap derivation over it. */
+    * near-dup GROUP instead: over a component assignment (id, comp) of
+    * the verified near-dup pairs ([[Dedup.connectedComponents]] — star
+    * contraction, O(log n) rounds), fold = component min-id mod
+    * `folds`, so every member of a group lands in the same fold by
+    * construction. The group map is built once (and typically
+    * persisted; see Aux.share's write-once store) and fold assignment
+    * is a cheap derivation over it. Output: (id, comp, fold) for every
+    * id in a pair; singleton docs (no pair) are their own group and can
+    * be folded by raw id downstream. All-integer (q119's oracle
+    * recomputes the components by recursive reachability and must
+    * agree on every fold count). */
   def foldsFromComponents(comps: DataFrame, folds: Int): DataFrame = {
     require(folds > 0)
     comps.withColumn("fold", pmod(col("comp"), lit(folds.toLong)))

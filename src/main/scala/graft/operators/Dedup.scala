@@ -12,9 +12,11 @@ import org.apache.spark.sql.expressions.Window
   *  - NEVER all-pairs: candidate generation is always a bucket join
   *    (LSH bands / SimHash blocks / hyperplane-sign buckets), so the
   *    shuffle key is the bucket and cost is Σ bucket²  not n².
-  *  - signatures are computed with Catalyst higher-order functions
-  *    (transform/aggregate over the token array) — no Python/Scala UDF in
-  *    the per-row path, stays in codegen.
+  *  - signatures are one-pass Scala UDFs ([[minhashSigOf]],
+  *    [[simhashBitsOf]]): a nested higher-order-function form re-evaluates
+  *    captured expressions per element (see [[minhashSigOf]]); banding,
+  *    bucketing and hamming/cosine verification run as codegen'd native
+  *    kernels.
   *  - pair verification (exact Jaccard / cosine) runs only on candidates.
   *  - survivors are chosen deterministically (min id per cluster) via a
   *    window, not dropDuplicates.
@@ -90,15 +92,6 @@ object Dedup {
   def shinglesUdf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((text: String) => if (text == null) null else shinglesOf(text, k))
 
-  /** Column form retained for composition on an already-materialized
-    * token-array ATTRIBUTE (never pass a computed expression — see
-    * [[minhashSigOf]] scaladoc). */
-  def wordShingles(tokens: Column, k: Int): Column =
-    when(size(tokens) < k, array(concat_ws(" ", tokens)))
-      .otherwise(transform(
-        sequence(lit(0), size(tokens) - k),
-        i => concat_ws(" ", slice(tokens, i + 1, lit(k)))))
-
   /** Composed HOF banding — interpreted reference implementation. */
   private[operators] def lshBucketsHof(sig: Column, bands: Int, rowsPerBand: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)), b =>
@@ -138,15 +131,6 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
-
-  /** Candidate near-dup pairs via MinHash LSH.
-    * @return (id_a, id_b) with id_a < id_b, distinct. */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        shingleK: Int = 3, numHashes: Int = 64,
-                        bands: Int = 16): DataFrame =
-    minhashCandidatesFromSigs(
-      minhashSigs(df, idCol, textCol, shingleK, numHashes),
-      bands, numHashes / bands)
 
   /** Per-document LSH band suppression flag with id precedence: a doc is
     * suppressed iff ANY of its band buckets contains a smaller id. This
@@ -260,15 +244,6 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Full MinHash near-dup pipeline: LSH candidates verified with exact
-    * shingle Jaccard ≥ threshold. Returns (id_a, id_b, jaccard). */
-  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, shingleK: Int = 3,
-                      numHashes: Int = 64, bands: Int = 16): DataFrame =
-    minhashNearDupsFromSigs(
-      minhashSigs(df, idCol, textCol, shingleK, numHashes),
-      threshold, bands, numHashes / bands)
-
   /** (id, shingle) posting list — each document's DISTINCT k-shingles,
     * exploded to rows. The row-local stage of the exact n-gram Jaccard
     * pipeline (everything downstream is relational; graft.Aux pattern). */
@@ -340,28 +315,6 @@ object Dedup {
           (col("sz_a") + col("sz_b") - col("n_common")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Full exact n-gram Jaccard near-dup pipeline. */
-  def ngramJaccardNearDups(df: DataFrame, idCol: String, textCol: String,
-                           threshold: Double, k: Int = 3,
-                           maxDf: Long = 4): DataFrame =
-    ngramJaccardNearDupsFromPostings(
-      ngramPostings(df, idCol, textCol, k), threshold, maxDf,
-      assumeDistinct = true)
-
-  /** Survivors after exact n-gram Jaccard dedup: min-id survivor per
-    * connected component of the near-dup pair graph (same fixpoint CC
-    * tail as [[minhashSurvivors]], so transitive chains collapse to one
-    * document). */
-  def ngramSurvivors(df: DataFrame, idCol: String, textCol: String,
-                     threshold: Double, k: Int = 3,
-                     maxDf: Long = 4): DataFrame = {
-    val pairs = ngramJaccardNearDups(df, idCol, textCol, threshold, k, maxDf)
-      .select("id_a", "id_b")
-    val losers = connectedComponents(pairs)
-      .filter(col("id") =!= col("comp")).select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
   }
 
   /** Connected components of an undirected pair graph (id_a, id_b) by
@@ -495,39 +448,12 @@ object Dedup {
       .select(col("id"), coalesce(col("star_min"), col("id")).as("comp"))
   }
 
-  /** Near-dup clustering → survivors: exact connected components over the
-    * verified near-dup pairs ([[connectedComponents]] to fixpoint);
-    * survivor = min id per component. Returns df filtered to survivors. */
-  def minhashSurvivors(df: DataFrame, idCol: String, textCol: String,
-                       threshold: Double): DataFrame = {
-    val pairs = minhashNearDups(df, idCol, textCol, threshold)
-      .select("id_a", "id_b")
-    val losers = connectedComponents(pairs)
-      .filter(col("id") =!= col("comp")).select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
-
   // ---------- SimHash ----------
 
-  /** Per-token ±1 votes per bit of xxhash64(token), summed over tokens
-    * (pure Catalyst: transform over bit indices + zip_with inside
-    * aggregate); sign of each vote → simhash bit. */
-  def simhashSigns(tokens: Column): Column =
-    aggregate(
-      transform(tokens, t => xxhash64(t)), // hash once per token, not per bit
-      transform(sequence(lit(0), lit(63)), _ => lit(0L)),
-      (acc, h) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(63)),
-          i => call_function("shiftrightunsigned", h, i).bitwiseAND(lit(1L)) * 2 - 1),
-        (x, y) => x + y))
-
-  def simhash64(tokens: Column): Column =
-    transform(simhashSigns(tokens), v => when(v > 0, 1).otherwise(0))
-
-  /** One-pass SimHash bits (same xxh64 token hashes as the expression
-    * form, so results agree) — the hot-path implementation; the
-    * interpreted HOF form costs ~64 boxed ops per token per bit. */
+  /** One-pass SimHash bits: per-token ±1 votes per bit of the token's
+    * xxh64 (the SQL `xxhash64()` value), summed over tokens; the sign of
+    * each vote is the bit. A UDF rather than a higher-order-function
+    * fold, which costs ~64 boxed ops per token per bit. */
   def simhashBitsOf(text: String): Array[Int] = {
     val votes = new Array[Int](64)
     text.split(" ", -1).foreach { t =>
@@ -583,12 +509,6 @@ object Dedup {
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
-
-  def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3): DataFrame =
-    simhashNearDupsFromBits(
-      df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("bits")),
-      maxHamming)
 
   // ---------- embedding cosine near-dup ----------
 
@@ -646,7 +566,8 @@ object Dedup {
 
   /** (id, v, bucket): the materialized stage of the embedding near-dup
     * pipeline (double-cast vector + sign-LSH bucket), aux-shareable with
-    * the SQL oracle. */
+    * the SQL oracle. `bits` sets bucket granularity, the recall/cost
+    * tradeoff: candidates must agree on ALL bits. */
   def embeddingBuckets(df: DataFrame, idCol: String, vecCol: String,
                        bits: Int = 8, dim: Int = 64): DataFrame = {
     val planes = hyperplanes(dim, bits)
@@ -669,12 +590,4 @@ object Dedup {
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
-
-  /** Embedding near-dup pairs: bucket by hyperplane signs, verify cosine ≥
-    * threshold inside buckets. `bits` controls bucket granularity
-    * (recall/cost tradeoff; candidates must agree on ALL bits). */
-  def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double, bits: Int = 8, dim: Int = 64): DataFrame =
-    embeddingNearDupsFromBuckets(
-      embeddingBuckets(df, idCol, vecCol, bits, dim), threshold)
 }

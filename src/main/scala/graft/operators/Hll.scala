@@ -1,8 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** HyperLogLog register computation — the industry-standard mergeable
   * distinct sketch (Flajolet et al. 2007, and the HLL surveyed in
   * Heule/Nunkesser/Hall "HyperLogLog in Practice", VLDB 2013), built so
@@ -21,26 +18,17 @@ import org.apache.spark.sql.functions._
   *
   * The float estimate (alpha_m·m²/Σ2^−reg + small/large-range
   * corrections) is left OUT of the relational output per the avg-class
-  * ground rule; [[estimate]] is the JVM-side consumer used by specs.
+  * ground rule; [[estimate]] is the JVM-side consumer.
   *
-  * Scale design: [[registers]] is one groupBy (grp, idx) max — a
-  * map-side-combined shuffle whose key space is |groups|·2^p regardless
-  * of input size. [[HllAgg]] is the same sketch as one 2^p-byte
-  * aggregation buffer (the streaming/state form).
+  * Scale design: [[HllAgg]] keeps the sketch as one 2^p-byte
+  * aggregation buffer per group (q225's rollup and the streaming state
+  * both run it); its update is [[idxRankJvm]].
   */
 object Hll {
 
-  /** Register index and rank columns for a LONG key column. */
-  def idxCol(key: Column, p: Int): Column =
-    Kmv.hash32(key, 2654435769L).bitwiseAND(lit((1L << p) - 1L))
-
-  def rankCol(key: Column, p: Int): Column = {
-    val v = shiftright(Kmv.hash32(key, 2654435769L), p)
-    when(v === 0L, lit(32 - p + 1).cast("long"))
-      .otherwise(lit(32 - p + 1).cast("long") - length(bin(v)).cast("long"))
-  }
-
-  /** JVM twin of idx/rank (HllSpec asserts ≡ the Column forms). */
+  /** Register index and rank of a LONG key: the low p bits of
+    * [[Kmv.hash32Jvm]] and the leading-run rank of the rest. q225's
+    * oracle rebuilds both from the same hash chain in SQL. */
   def idxRankJvm(key: Long, p: Int): (Int, Int) = {
     val h = Kmv.hash32Jvm(key)
     val idx = (h & ((1L << p) - 1L)).toInt
@@ -49,23 +37,11 @@ object Hll {
     (idx, 32 - p + 1 - bitlen)
   }
 
-  /** Plan-level register vector as ROWS: (grp, idx, reg) with reg =
-    * max rank per register; registers never touched are absent (reg 0).
-    * Bit-identical to [[HllAgg]]'s buffer (HllSpec). */
-  def registers(df: DataFrame, grpCol: String, keyCol: String, p: Int): DataFrame = {
-    require(p >= 4 && p <= 16, "p: 4..16")
-    val keyed = df.select(col(grpCol).as("grp"), col(keyCol).cast("long").as("_k"))
-      .filter(col("_k").isNotNull)
-    keyed
-      .select(col("grp"), idxCol(col("_k"), p).as("idx"),
-        rankCol(col("_k"), p).as("rank"))
-      .groupBy("grp", "idx")
-      .agg(max("rank").as("reg"))
-  }
-
   /** Standard HLL estimate from a full register vector (length 2^p),
     * with the small-range (linear counting) and 32-bit large-range
-    * corrections. Spec-side consumer only. */
+    * corrections. The JVM-side reader of the vector [[HllAgg]] emits:
+    * the float estimate stays out of relational outputs (avg-class
+    * rule), so a caller that wants a cardinality folds it here. */
   def estimate(regs: Array[Long]): Double = {
     val m = regs.length.toDouble
     val alpha = regs.length match {

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * at equal accuracy). update = register max (idempotent — duplicates
   * free), merge = elementwise max — associative, commutative,
   * order-independent, so any partitioning or micro-batch slicing yields
-  * the same bytes (HllSpec proves agg ≡ [[Hll.registers]] plan form ≡
-  * streaming via [[graft.streaming.SketchStreams.windowedHll]]).
+  * the same bytes (HllSpec proves agg ≡ registers folded on the driver
+  * from [[Hll.idxRankJvm]] ≡ streaming via
+  * [[graft.streaming.SketchStreams.windowedHll]]).
   *
   * eval emits the FULL register vector (2^p longs); q214 gates it
   * against a DuckDB oracle rebuilding the identical registers in SQL
@@ -80,7 +81,7 @@ case class HllAgg(
 object HllAgg {
 
   /** Aggregate Column: the 2^p-long register vector over a LONG key
-    * column (cast upstream). Bit-identical to [[Hll.registers]]. */
+    * column (cast upstream). */
   def hll_registers(key: Column, p: Int): Column =
     column(HllAgg(expression(key), p).toAggregateExpression())
 }

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * no shuffle); the bits frame is 64 small integers per image; the
   * candidate join is bucketed by 16-bit segment value. Grid means are
   * size-invariant, so re-encoded/resized near-duplicates of the same
-  * frame still collide — which raw-byte dedup (Multimodal.dedupByContent)
-  * can never do.
+  * frame still collide — which raw-byte dedup (q301's payload md5) can
+  * never do.
   *
   * Cache ownership: persists internal frames the returned (lazy)
   * result depends on; the CALLER releases after materializing —

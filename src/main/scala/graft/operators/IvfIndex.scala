@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic
-  * scale path next to sign-LSH ([[Similarity.lshTopK]]): a k-means
+  * scale path next to sign-LSH ([[Similarity.multiprobe]]): a k-means
   * coarse quantizer partitions the corpus into nlist cells; a query
   * probes only its nprobe nearest cells.
   *
@@ -133,15 +133,6 @@ object IvfIndex {
         .select(col("query_id"), col("qv"), col("corpus_id"), col("cv")), k)
   }
 
-  /** IVF retrieval as a [[Similarity.TopK]] strategy — the ANN backend
-    * for [[Similarity.knnPredict]] (builds the index on the corpus,
-    * probes `nprobe` cells). */
-  def topKProvider(nlist: Int, nprobe: Int): Similarity.TopK =
-    (queries, corpus, queryIdCol, corpusIdCol, vecCol, k) => {
-      val index = build(corpus, corpusIdCol, vecCol, nlist)
-      topK(index, queries, queryIdCol, vecCol, k, nprobe)
-    }
-
   // ---------- persisted per-cell layout (the 100 TB path) ----------
 
   /** Persist the index with the assigned corpus PARTITIONED BY CELL
@@ -210,38 +201,19 @@ object IvfIndex {
     path
   }
 
-  /** Top-k over a PERSISTED index with scan-level partition pruning: the
-    * distinct probed cell ids (≤ nQueries × nprobe ints — metadata, not
-    * data) drive an `isin` partition filter, so the parquet scan reads
-    * only the probed `cell=N/` directories; [[graft.sources
-    * .StructureStore.filesScanned]] proves it in IvfIndexSpec. The
-    * broadcast probe join then pairs each query with exactly its own
-    * cells' rows. */
-  def topKStored(spark: org.apache.spark.sql.SparkSession, path: String,
-                 queries: DataFrame, queryIdCol: String, vecCol: String,
-                 k: Int, nprobe: Int): DataFrame = {
-    val index = load(spark, path)
-    // reuse the load()'s assigned frame — a second read.parquet of the
-    // same store would re-pay the driver-side file listing
-    storedTopK(index.assigned,
-      probes(index, queries, queryIdCol, vecCol, nprobe), k)
-  }
-
-  /** [[topKStored]] with the probe list supplied by the caller (the
-    * oracle-gated queries materialize probes to aux parquet first, so the
-    * same frame feeds both the Spark search and the DuckDB re-derivation). */
-  def topKStoredWithProbes(spark: org.apache.spark.sql.SparkSession,
-                           path: String, probes: DataFrame, k: Int): DataFrame =
-    storedTopK(spark.read.parquet(s"$path/assigned"), probes, k)
-
-  /** Same, reusing an already-[[load]]ed index (no second store read). */
-  def topKStoredWithProbes(index: Index, probes: DataFrame, k: Int): DataFrame =
-    storedTopK(index.assigned, probes, k)
-
-  private def storedTopK(assigned: DataFrame, probes: DataFrame,
-                         k: Int): DataFrame = {
+  /** Top-k over a [[load]]ed PERSISTED index with scan-level partition
+    * pruning: the distinct probed cell ids (≤ nQueries × nprobe ints —
+    * metadata, not data) drive an `isin` partition filter, so the
+    * parquet scan reads only the probed `cell=N/` directories;
+    * [[graft.sources.StructureStore.filesScanned]] proves it in
+    * IvfIndexSpec. The broadcast probe join then pairs each query with
+    * exactly its own cells' rows. The caller supplies the [[probes]]
+    * list: the oracle-gated queries materialize it to aux parquet
+    * first, so the same frame feeds both the Spark search and the
+    * DuckDB re-derivation. */
+  def topKStoredWithProbes(index: Index, probes: DataFrame, k: Int): DataFrame = {
     val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = assigned.filter(col("cell").isin(cells: _*))
+    val pruned = index.assigned.filter(col("cell").isin(cells: _*))
     Similarity.rankTopK(
       pruned.join(broadcast(probes), Seq("cell"))
         .select(col("query_id"), col("qv"), col("corpus_id"), col("cv")), k)

@@ -72,7 +72,9 @@ object Kmv {
     * k_used = min(k, |distinct keys|) and kth_hash is the k_used-th
     * smallest hash — the pair that determines the estimate
     * (k_used−1)·2³²/kth_hash (float left to the consumer; for groups
-    * with fewer than k distinct keys the sketch IS the exact count). */
+    * with fewer than k distinct keys the sketch IS the exact count).
+    * Second form kept on purpose: this plan form serves the batch query
+    * (q162); [[KmvAgg]] serves the streaming state (q176). */
   def sketch(df: DataFrame, grpCol: String, keyCol: String, k: Int,
              seed: Long = 2654435769L): DataFrame = {
     require(k >= 2 && k <= 65536, "k: 2..65536")

@@ -28,6 +28,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * — associative and order-independent, so partial buffers from any
   * partitioning or micro-batch slicing combine to the same bits
   * (KmvAggSpec proves batch ≡ [[Kmv.sketch]] ≡ streaming).
+  * Second form kept on purpose: this buffer serves the streaming state
+  * ([[graft.streaming.SketchStreams.windowedKmv]], q176); the batch
+  * query q162 runs [[Kmv.sketch]].
   *
   * The hash is [[Kmv.hash32]]'s two-round masked-xorshift chain
   * evaluated on the JVM ([[Kmv.hash32Jvm]]); KmvSpec asserts the JVM

@@ -304,17 +304,6 @@ object Multimodal {
     }
     private val MaxFrames = 100000
 
-    /** Number of frames (metadata-cheap: header walk only). */
-    def frameCount(content: Array[Byte]): Int = frameOffsets(content).size
-
-    /** The i-th frame as a standalone, valid P6 PPM. */
-    def frameAt(content: Array[Byte], i: Int): Array[Byte] = {
-      val fs = frameOffsets(content)
-      require(i >= 0 && i < fs.size, s"frame $i of ${fs.size}")
-      val (headerOff, rasterOff, w, h, _) = fs(i)
-      java.util.Arrays.copyOfRange(content, headerOff, rasterOff + w * h * 3)
-    }
-
     def decode(content: Array[Byte]): Array[Float] = {
       val fs = frameOffsets(content)
       val nFrames = fs.size
@@ -365,9 +354,9 @@ object Multimodal {
     * corrupt (truncated raster, bad chunk sizes) degrades to the stub
     * features instead of throwing — at corpus scale one bad file must
     * not kill the extraction job. Corruption is still observable:
-    * [[dedupByContent]]/n_bytes carry the raw payload, and a validity
-    * flag can be recovered by re-running the strict decoder on
-    * suspects. */
+    * the raw payload stays in `content` (q301's md5 dedup keys on it),
+    * and a validity flag can be recovered by re-running the strict
+    * decoder on suspects. */
   object RealCodec extends MediaCodec {
     def decode(kind: String, content: Array[Byte]): Array[Float] =
       if (content == null || content.isEmpty) new Array[Float](FeatureDim)
@@ -452,8 +441,8 @@ object Multimodal {
     * pipeline: images nearest-neighbor-resized to imgW×imgH, audio
     * decimated by audioFactor, video/opaque rows passed through. Output
     * is the same schema with re-encoded (still valid PPM/WAV) content,
-    * so transcode composes with [[extractFeatures]] and
-    * [[dedupByContent]]. */
+    * so transcode composes with [[extractFeatures]] and exact payload
+    * dedup. */
   def transcode(media: DataFrame, imgW: Int, imgH: Int,
                 audioFactor: Int): DataFrame =
     media.withColumn("content",
@@ -471,8 +460,8 @@ object Multimodal {
   private val extractFramesUdf = udf((content: Array[Byte], everyK: Int) =>
     if (content == null || content.isEmpty) Seq.empty[(Int, Array[Byte])]
     else try {
-      // one header walk for the whole stream, then O(1) slices — calling
-      // frameAt per frame would re-walk all headers each time (O(F²))
+      // one header walk for the whole stream, then O(1) slices — a
+      // per-frame lookup would re-walk all headers each time (O(F²))
       val offsets = PpmStreamCodec.frameOffsets(content)
       (0 until offsets.size by everyK).map { i =>
         val (headerOff, rasterOff, w, h, _) = offsets(i)
@@ -486,8 +475,9 @@ object Multimodal {
     * frame decoded out of the container as a standalone valid P6 — one
     * output row per sampled frame, so the result feeds straight back
     * into the image pipeline ([[extractFeatures]], [[transcode]],
-    * [[dedupByContent]]). Non-stream/corrupt payloads yield no rows
-    * (same degrade-don't-kill policy as [[RealCodec]]). */
+    * exact content dedup via [[Dedup.exactSurvivors]]). Non-stream/
+    * corrupt payloads yield no rows (same degrade-don't-kill policy as
+    * [[RealCodec]]). */
   def extractFrames(media: DataFrame, everyK: Int = 1): DataFrame =
     media.filter(col("kind") === "video")
       .select(col("media_id"),
@@ -569,17 +559,6 @@ object Multimodal {
       .agg(min(col("idx")).as("seg_start"), count(lit(1)).as("seg_len"))
       .filter(col("seg_len") >= minLen)
       .select(col("media_id"), col("seg_start"), col("seg_len"))
-  }
-
-  /** Exact binary dedup on content hash + length (cheap pre-filter before
-    * byte-equality if collisions matter). */
-  def dedupByContent(media: DataFrame): DataFrame = {
-    val hashed = media.withColumn("content_hash", xxhash64(col("content")))
-      .withColumn("n_bytes", length(col("content")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("content_hash", "n_bytes").orderBy(col("media_id"))
-    hashed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Deterministic payload generator: image rows get a REAL binary P6

@@ -23,10 +23,9 @@ import org.apache.spark.sql.functions._
   * solution uses ≤ k entries (k−1 independent fraction constraints + the
   * sum constraint), so minimizing over all ≤k-subsets with a small
   * Gaussian solve is exact. Reference sets per chemical system are tens
-  * of entries with k ≤ 4 — subset counts are trivial, and the whole
-  * computation is row-local once each candidate row carries its system's
-  * reference list (a groupBy-collect on the tiny reference dimension +
-  * broadcast join; the per-candidate work distributes).
+  * of entries with k ≤ 4, so subset counts are trivial. The
+  * oracle-gated query (q66) runs the binary case as a relational plan,
+  * [[binaryHullEnergy]]; PhaseHullSpec pins the general LP against it.
   */
 object PhaseHull {
 
@@ -113,36 +112,12 @@ object PhaseHull {
   }
 
   /** e_above_hull for one candidate; the reference's "no valid
-    * decomposition → 0.0" rule applied. */
+    * decomposition → 0.0" rule applied. Ports the reference's
+    * e-above-hull query for any number of elements:
+    * openlam_database/openlam/lam_optimize/utils.py:139-190. */
   def eAboveHull(refs: Seq[(Array[Double], Double)], x: Array[Double],
                  ePerAtom: Double): Double =
     hullEnergyAt(refs, x).map(h => ePerAtom - h).getOrElse(0.0)
-
-  private val eAboveHullUdf = udf(
-    (refFracs: Seq[Seq[Double]], refEs: Seq[Double], fracs: Seq[Double],
-     e: Double) =>
-      eAboveHull(refFracs.map(_.toArray).zip(refEs), fracs.toArray, e))
-
-  /** Distributed operator: candidates (id, system, fracs, e_per_atom)
-    * against references (system, fracs, e_per_atom). The reference
-    * dimension is grouped per system (sorted for determinism) and
-    * BROADCAST into an equi-join on system; the LP runs row-local on the
-    * executors — at 100 TB of candidates the references stay a
-    * dimension, nothing shuffles but the candidate scan. */
-  def eAboveHullAll(candidates: DataFrame, references: DataFrame): DataFrame = {
-    val refsBySystem = references
-      .groupBy("system")
-      .agg(sort_array(collect_list(struct(col("fracs"), col("e_per_atom"))))
-        .as("refs"))
-      .select(col("system"),
-        col("refs.fracs").as("ref_fracs"),
-        col("refs.e_per_atom").as("ref_es"))
-    candidates.join(broadcast(refsBySystem), Seq("system"))
-      .withColumn("e_above_hull",
-        eAboveHullUdf(col("ref_fracs"), col("ref_es"), col("fracs"),
-          col("e_per_atom")))
-      .drop("ref_fracs", "ref_es")
-  }
 
   /** Binary-system hull via explicit segment interpolation — the
     * SQL-mirrorable twin used by the oracle-gated query (for k = 2 the

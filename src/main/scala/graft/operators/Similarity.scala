@@ -13,15 +13,17 @@ import org.apache.spark.sql.expressions.Window
   *    expressions, ranked per query by a window. At 100 TB the corpus side
   *    stays partition-parallel and nothing but (query × k) rows survive
   *    the rank filter.
-  *  - [[lshTopK]]: sign-LSH bucketed search with multiprobe (flip each of
-  *    the `bits` bucket bits) — the scale path: the corpus is bucketed
-  *    once (shuffle on bucket key), each query probes 1+bits buckets, so
-  *    cost per query is the bucket occupancy, not the corpus size. Recall
-  *    vs the exact baseline is asserted in SimilaritySpec.
+  *  - sign-LSH bucketed search with [[multiprobe]] (flip each of the
+  *    `bits` bucket bits) — the scale path q40 runs: the corpus is
+  *    bucketed once ([[Dedup.signBucket]], shuffle on bucket key), each
+  *    query probes 1+bits buckets, so cost per query is the bucket
+  *    occupancy, not the corpus size, and [[rankTopK]] ranks the
+  *    candidates. Recall vs the exact baseline is asserted in
+  *    SimilaritySpec.
   */
 object Similarity {
 
-  import Dedup.{cosine, dot, norm, signBucket, hyperplanes}
+  import Dedup.cosine
 
   /** Shared ranking tail: score candidate (query_id, qv, corpus_id, cv)
     * pairs with 6dp-rounded cosine and keep the per-query top-k (ties
@@ -48,36 +50,18 @@ object Similarity {
     rankTopK(c.crossJoin(q), k)
   }
 
-  /** Sign-LSH ANN top-k with multiprobe: each query searches its own
-    * bucket plus the `bits` hamming-1 buckets. Same output shape as
-    * [[bruteForceTopK]]; approximate (rank within retrieved candidates). */
-  def lshTopK(queries: DataFrame, corpus: DataFrame,
-              queryIdCol: String, corpusIdCol: String,
-              vecCol: String, k: Int, bits: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(dim, bits)
-    val c = corpus.select(col(corpusIdCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("bucket", signBucket(col("cv"), planes))
-    // query probes: own bucket + flip each bit once
-    val q = broadcast(queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("qbucket", signBucket(col("qv"), planes))
-      .withColumn("probe", explode(concat(
-        array(col("qbucket")),
-        transform(sequence(lit(0), lit(bits - 1)),
-          i => col("qbucket").bitwiseXOR(call_function("shiftleft", lit(1L), i)))))))
-    rankTopK(c.join(q, c("bucket") === q("probe"))
-      .select(col("query_id"), col("qv"), col("corpus_id"), col("cv")), k)
-  }
-
-  /** A top-k retrieval strategy: (queries, corpus, queryIdCol,
-    * corpusIdCol, vecCol, k) → (query_id, corpus_id, sim, rank). All
-    * three retrieval paths (brute force, sign-LSH, IVF via
-    * [[IvfIndex.topKProvider]]) satisfy this shape. */
-  type TopK = (DataFrame, DataFrame, String, String, String, Int) => DataFrame
+  /** Sign-LSH multiprobe list of a `bits`-bit bucket key: the bucket
+    * itself, then the `bits` hamming-1 neighbours (flip each bit once).
+    * A query that probes every listed bucket searches its own bucket
+    * plus every bucket one hyperplane away. */
+  def multiprobe(bucket: Column, bits: Int): Column =
+    concat(array(bucket),
+      transform(sequence(lit(0), lit(bits - 1)),
+        i => bucket.bitwiseXOR(call_function("shiftleft", lit(1L), i))))
 
   /** Majority vote over retrieved neighbors: (query_id, predicted, votes),
-    * ties broken by label — the shared classification tail. */
+    * ties broken by label — the k-NN classification tail q42 runs over
+    * its [[rankTopK]] neighbours. */
   def majorityVote(topk: DataFrame, labels: DataFrame): DataFrame =
     topk.join(labels, Seq("corpus_id"))
       .groupBy("query_id", "label").agg(count(lit(1)).as("votes"))
@@ -85,19 +69,6 @@ object Similarity {
         Window.partitionBy("query_id").orderBy(desc("votes"), col("label"))))
       .filter(col("rn") === 1)
       .select(col("query_id"), col("label").as("predicted"), col("votes"))
-
-  /** k-NN classification shape: majority label among the top-k neighbors
-    * (deterministic tie-break by label). `topK` selects the retrieval
-    * path — exact by default, or any ANN strategy with the same output
-    * shape (sign-LSH, IVF). */
-  def knnPredict(queries: DataFrame, corpus: DataFrame,
-                 queryIdCol: String, corpusIdCol: String,
-                 vecCol: String, labelCol: String, k: Int,
-                 topK: TopK = bruteForceTopK): DataFrame = {
-    val retrieved = topK(queries, corpus, queryIdCol, corpusIdCol, vecCol, k)
-    val labels = corpus.select(col(corpusIdCol).as("corpus_id"), col(labelCol).as("label"))
-    majorityVote(retrieved, labels)
-  }
 
   /** Late-interaction (ColBERT-style) MaxSim scoring: an ENTITY is a
     * bag of vectors; against a bounded query-vector panel its score is

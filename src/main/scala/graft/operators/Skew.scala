@@ -41,14 +41,4 @@ object Skew {
       explode(sequence(lit(0), lit(salts - 1))))
     bigSalted.join(smallSalted, Seq(key, "__salt"), joinType).drop("__salt")
   }
-
-  /** Top key shares — the diagnostic that decides whether to salt:
-    * returns (key, count, share) for the k heaviest keys. */
-  def keySkew(df: DataFrame, key: String, topK: Int = 10): DataFrame = {
-    val total = df.count()
-    df.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
-      .withColumn("share", col("cnt").cast("double") / total)
-      .orderBy(desc("cnt"))
-      .limit(topK)
-  }
 }

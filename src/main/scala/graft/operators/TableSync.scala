@@ -57,31 +57,40 @@ object TableSync {
       xs32(h.bitwiseXOR(c.bitwiseAND(lit(M32)))
         .bitwiseXOR(shiftright(c, 32).bitwiseAND(lit(M32)))))
 
-  /** Per-bucket digests of `df`: (bucket, n, h_lo, h_hi). `keyH`/`rowH`
-    * are [[rowHash]] columns over the key columns / all compared
-    * columns. One scan, map-side combine, ≤ `buckets` result rows. */
-  def bucketDigest(df: DataFrame, keyH: Column, rowH: Column,
-                   buckets: Int): DataFrame = {
+  /** Per-bucket digests of both snapshots in ONE aggregation over the
+    * side-tagged union of the two scans: (bucket, n_o, lo_o, hi_o, n_n,
+    * lo_n, hi_n), the row count and the two limb sums of `rowH` per side.
+    * `keyH`/`rowH` are [[rowHash]] columns over the key columns / all
+    * compared columns. One scan per side, map-side combine, ≤ `buckets`
+    * result rows. (r12 optimization round, guide §2.4: the previous
+    * shape ran two separate digest aggregations and full-outer-joined
+    * them — two shuffles plus a join stage for the same ≤ buckets
+    * rows.) A bucket missing on one side has n = 0 there. */
+  def bucketDigests(oldDf: DataFrame, newDf: DataFrame, keyH: Column,
+                    rowH: Column, buckets: Int): DataFrame = {
     require(buckets > 0)
-    df.select(pmod(keyH, lit(buckets.toLong)).as("bucket"), rowH.as("h"))
+    def tagged(df: DataFrame, side: Long) = df.select(
+      pmod(keyH, lit(buckets.toLong)).as("bucket"), rowH.as("h"),
+      lit(side).as("_s"))
+    def sideSum(side: Long, v: Column) =
+      sum(when(col("_s") === side, v).otherwise(0L))
+    tagged(oldDf, 0L).unionByName(tagged(newDf, 1L))
       .groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        sum(col("h").bitwiseAND(lit(65535L))).as("h_lo"),
-        sum(shiftright(col("h"), 16)).as("h_hi"))
+      .agg(sideSum(0L, lit(1L)).as("n_o"),
+        sideSum(0L, col("h").bitwiseAND(lit(65535L))).as("lo_o"),
+        sideSum(0L, shiftright(col("h"), 16)).as("hi_o"),
+        sideSum(1L, lit(1L)).as("n_n"),
+        sideSum(1L, col("h").bitwiseAND(lit(65535L))).as("lo_n"),
+        sideSum(1L, shiftright(col("h"), 16)).as("hi_n"))
   }
 
-  /** Buckets whose digests disagree (either side missing counts as
-    * disagreeing). Output: (bucket) — at most `buckets` rows. */
-  def dirtyBuckets(oldDig: DataFrame, newDig: DataFrame): DataFrame = {
-    val o = oldDig.select(col("bucket"), col("n").as("n_o"),
-      col("h_lo").as("lo_o"), col("h_hi").as("hi_o"))
-    val n = newDig.select(col("bucket"), col("n").as("n_n"),
-      col("h_lo").as("lo_n"), col("h_hi").as("hi_n"))
-    o.join(n, Seq("bucket"), "full_outer")
-      .filter(!(col("n_o") <=> col("n_n")) || !(col("lo_o") <=> col("lo_n")) ||
-        !(col("hi_o") <=> col("hi_n")))
+  /** Buckets whose [[bucketDigests]] disagree: (bucket), at most
+    * `buckets` rows. The n comparison subsumes the missing-side case. */
+  def dirtyBuckets(digests: DataFrame): DataFrame =
+    digests
+      .filter(col("n_o") =!= col("n_n") || col("lo_o") =!= col("lo_n") ||
+        col("hi_o") =!= col("hi_n"))
       .select("bucket")
-  }
 
   /** End-to-end reconciliation: digest both snapshots, find dirty
     * buckets, and run the exact row diff over dirty-bucket rows only.
@@ -97,34 +106,13 @@ object TableSync {
   def syncDiff(oldDf: DataFrame, newDf: DataFrame, keyH: Column,
                rowH: Column, buckets: Int,
                keyCols: Seq[String], cmpCols: Seq[String]): DataFrame = {
-    // Both digests in ONE aggregation over the side-tagged union of the
-    // two scans (r12 optimization round, guide §2.4): the previous
-    // shape ran two separate digest aggregations and full-outer-joined
-    // them — two shuffles plus a join stage for the same ≤ buckets
-    // rows. A bucket missing on one side has n = 0 there and some rows
-    // on the other, so the n comparison subsumes the full-outer
-    // missing-side case.
     // persist: `dirty` (≤ buckets rows) is broadcast into BOTH scans'
     // semi-joins below; without caching, each broadcast re-runs both
     // digest scans+aggregations (AQE's broadcast rewrite defeats
     // ReuseExchange across the two consumers — same mechanism as
     // [[SetSimJoin.jaccardJoin]]'s persisted stages)
-    def tagged(df: DataFrame, side: Long) = df.select(
-      pmod(keyH, lit(buckets.toLong)).as("bucket"), rowH.as("h"),
-      lit(side).as("_s"))
-    def sideSum(side: Long, v: Column) =
-      sum(when(col("_s") === side, v).otherwise(0L))
-    val dirty = tagged(oldDf, 0L).unionByName(tagged(newDf, 1L))
-      .groupBy("bucket")
-      .agg(sideSum(0L, lit(1L)).as("n_o"),
-        sideSum(0L, col("h").bitwiseAND(lit(65535L))).as("lo_o"),
-        sideSum(0L, shiftright(col("h"), 16)).as("hi_o"),
-        sideSum(1L, lit(1L)).as("n_n"),
-        sideSum(1L, col("h").bitwiseAND(lit(65535L))).as("lo_n"),
-        sideSum(1L, shiftright(col("h"), 16)).as("hi_n"))
-      .filter(col("n_o") =!= col("n_n") || col("lo_o") =!= col("lo_n") ||
-        col("hi_o") =!= col("hi_n"))
-      .select("bucket").persist()
+    val dirty = dirtyBuckets(
+      bucketDigests(oldDf, newDf, keyH, rowH, buckets)).persist()
     val b = pmod(keyH, lit(buckets.toLong))
     // Row recovery as ONE side-tagged union + key aggregation (r13
     // optimization round, guide §2.4 — the digest stage's trick

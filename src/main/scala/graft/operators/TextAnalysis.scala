@@ -19,12 +19,6 @@ object TextAnalysis {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** A BPE-ish subword segmentation regex: splits on whitespace AND
-    * letter/digit boundaries AND case transitions — the cheap
-    * approximation of a learned-merge tokenizer's pre-tokenizer. */
-  def subwordCount(text: Column): Column =
-    size(split(text, "\\s+|(?<=[a-z])(?=[A-Z])|(?<=[0-9])(?=[A-Za-z])|(?<=[A-Za-z])(?=[0-9])"))
-
   /** Characters that are neither alphanumeric nor space, as a fraction of
     * all characters. */
   def punctRatio(text: Column): Column =

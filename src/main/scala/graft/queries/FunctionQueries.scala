@@ -84,8 +84,8 @@ object FunctionQueries {
     // a binary phase diagram where the hull is the lower segment
     // envelope, so BOTH engines state the identical interpolation
     // arithmetic (a.e + (b.e-a.e)*(x-a.x)/(b.x-a.x) — mirrored ops are
-    // bit-identical, CLAUDE.md rule); the general k-element LP operator
-    // (PhaseHull.eAboveHullAll) is pinned against this same fixture plus
+    // bit-identical, CLAUDE.md rule); the general k-element LP
+    // (PhaseHull.eAboveHull) is pinned against this same fixture plus
     // ternary hand cases in PhaseHullSpec. Fixture: two binary systems
     // with pure-element anchors, on-hull and above-hull references.
     QueryDef.sql("q66_e_above_hull",

@@ -348,9 +348,7 @@ object PipelineQueries {
           .select(col("vec_id").as("query_id"),
             col("embedding").cast("array<double>").as("qv"))
           .withColumn("qbucket", Dedup.signBucket(col("qv"), planes))
-          .withColumn("probes", concat(array(col("qbucket")),
-            transform(sequence(lit(0), lit(7)),
-              i => col("qbucket").bitwiseXOR(call_function("shiftleft", lit(1L), i)))))
+          .withColumn("probes", Similarity.multiprobe(col("qbucket"), bits = 8))
           .select("query_id", "qv", "probes"),
         d, "q40_queries")
       val cands = corpus.join(
@@ -1520,7 +1518,7 @@ object PipelineQueries {
         .orderBy(col("cnt").desc, col("w1"), col("w2")).limit(20)
     },
 
-    // Leakage-safe fold assignment (Curation.groupAwareFolds): fold by
+    // Leakage-safe fold assignment (Curation.foldsFromComponents): fold by
     // near-dup GROUP (connected components of the q112 trade graph),
     // not by raw id, so related items can never straddle train/eval.
     // The engine runs star contraction + mod; the oracle recomputes

@@ -133,8 +133,8 @@ object SketchStreams {
     * [[windowedKmv]]'s k·16-byte pair buffer). Register merge is
     * elementwise max — idempotent AND order-independent, so duplicates,
     * partitioning and micro-batch slicing all yield identical bytes
-    * (HllSpec proves streaming ≡ batch ≡ the [[graft.operators.Hll]]
-    * plan form); q214 gates the batch frame against a DuckDB oracle
+    * (HllSpec proves streaming ≡ batch, and batch ≡ registers folded on
+    * the driver from [[graft.operators.Hll.idxRankJvm]]); q214 gates the batch frame against a DuckDB oracle
     * rebuilding the registers in SQL. Emits the nonzero registers as
     * rows. */
   def windowedHll(events: DataFrame, tsCol: String, keyCol: String,

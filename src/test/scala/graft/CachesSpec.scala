@@ -28,8 +28,9 @@ class CachesSpec extends AnyFunSuite {
       (i, Seq(a, 1f - a, a * a), (i % 3).toString)
     }.toDF("vec_id", "embedding", "label")
 
-    val nearDups = operators.Dedup.minhashNearDups(
-      docs, "doc_id", "text", threshold = 0.5).count()
+    val nearDups = operators.Dedup.minhashNearDupsFromSigs(
+      operators.Dedup.minhashSigs(docs, "doc_id", "text"),
+      threshold = 0.5, bands = 16, rowsPerBand = 4).count()
     val knn = operators.SemDedup.knnLabelAgreement(emb, k = 4).count()
     val negs = operators.SemDedup.hardNegatives(emb, k = 4).count()
     assert(nearDups >= 0 && knn >= 0 && negs >= 0)

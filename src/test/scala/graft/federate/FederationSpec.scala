@@ -149,7 +149,7 @@ class FederationSpec extends AnyFunSuite {
     // the cases above reach the quota, the dedup and the truncation
     val fr = federatedQuery(spark, sources, filter = None, nResults = 10,
       idCol = "id", orderCol = "ord", maxReturned = 5)
-    assert(QuotaPlanner.planTotal(fr.plan) == 10)
+    assert(QuotaPlannerSpec.planTotal(fr.plan) == 10)
     assert(fr.data.count() == 5)
     val all = federatedQuery(spark, sources, filter = None, nResults = 40,
       idCol = "id", orderCol = "ord", maxReturned = 100).data.collect()
@@ -182,7 +182,7 @@ class FederationSpec extends AnyFunSuite {
     val df = fr.data
     assert(fr.failures.isEmpty)
     // p3 capacity-bound at 5; remaining 15 water-fills p1/p2 → 28+27+5
-    assert(QuotaPlanner.planTotal(fr.plan) == 60)
+    assert(QuotaPlannerSpec.planTotal(fr.plan) == 60)
     val rows = df.collect()
     assert(rows.length == 30)
     // dedup: overlapping ids resolved to the earlier provider

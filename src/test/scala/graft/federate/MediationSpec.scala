@@ -15,22 +15,6 @@ class MediationSpec extends AnyFunSuite {
     assert(out.columns.toSeq == Seq("id", "nelements"))
   }
 
-  test("mediate renames provider columns to canonical, nulls the missing (F5)") {
-    import spark.implicits._
-    val alexandria = Seq(("s1", 221, 1.5)).toDF("id", "_alexandria_space_group", "_alexandria_band_gap")
-    val med = Mediation.mediate(alexandria, Mediation.providerMediation("alexandria"))
-    val row = med.select("space_group_number", "band_gap").collect().head
-    assert(row.getInt(0) == 221 && row.getDouble(1) == 1.5)
-
-    val tcod = Seq(("s2", "P m -3 m")).toDF("id", "_tcod_sg")
-    val medT = Mediation.mediate(tcod,
-      Mediation.providerMediation("tcod") ++ Map("band_gap" -> "_tcod_band_gap"))
-    val rowT = medT.select("space_group_tcod", "band_gap").collect().head
-    assert(rowT.getString(0) == "P m -3 m" && rowT.isNullAt(1))
-    // one canonical predicate now serves both sources
-    assert(medT.filter(col("band_gap").isNull).count() == 1)
-  }
-
   test("combineFilters (F6)") {
     assert(Mediation.combineFilters(None, None).isEmpty)
     import spark.implicits._

@@ -80,7 +80,7 @@ class QuotaPlannerSpec extends AnyFunSuite {
       val p = QuotaPlanner.distributeQuotaFair(stats, n)
       val totalCap = stats.flatMap(_._2.map(_._2)).sum
       if (n > 0) {
-        assert(QuotaPlanner.planTotal(p) == math.min(n, totalCap),
+        assert(QuotaPlannerSpec.planTotal(p) == math.min(n, totalCap),
           s"total mismatch: stats=$stats n=$n plan=$p")
         val caps = stats.flatMap { case (c, us) => us.map { case (u, cap) => (c, u) -> cap } }.toMap
         p.foreach { case (c, us) => us.foreach { case (u, q) =>
@@ -137,7 +137,7 @@ class QuotaPlannerSpec extends AnyFunSuite {
           capByClause(c) > 0 && t < capByClause(c) }
         val fair = unconstrained.size <= 1 ||
           unconstrained.values.max - unconstrained.values.min <= 1
-        QuotaPlanner.planTotal(p) == math.min(n, totalCap) && capsOk && fair
+        QuotaPlannerSpec.planTotal(p) == math.min(n, totalCap) && capsOk && fair
       }
     }
     val res = SCTest.check(
@@ -171,7 +171,7 @@ class QuotaPlannerSpec extends AnyFunSuite {
     assert(secs < 60.0, s"planner took ${secs}s on 2000 clauses / ~4000 urls")
 
     val totalCap = stats.flatMap(_._2.map(_._2)).sum
-    assert(QuotaPlanner.planTotal(p) == math.min(n, totalCap))
+    assert(QuotaPlannerSpec.planTotal(p) == math.min(n, totalCap))
     val caps = stats.flatMap { case (c, us) =>
       us.map { case (u, cap) => (c, u) -> cap } }.toMap
     p.foreach { case (c, us) => us.foreach { case (u, q) =>
@@ -192,4 +192,9 @@ class QuotaPlannerSpec extends AnyFunSuite {
     assert(math.abs(t2("g1") - t2("g2")) <= 1 &&
       t2("g1") + t2("g2") == 99999)
   }
+}
+
+object QuotaPlannerSpec {
+  /** Σ of every URL quota in a plan. */
+  def planTotal(plan: QuotaPlanner.Plan): Int = plan.flatMap(_._2.map(_._2)).sum
 }

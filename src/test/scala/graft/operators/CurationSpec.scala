@@ -29,16 +29,6 @@ class CurationSpec extends AnyFunSuite {
     assert(all == 100L)
   }
 
-  test("samplePredicate: pure filter (no shuffle) at a plausible rate") {
-    val sampled = corpus.filter(Curation.samplePredicate(col("id"), "29"))
-    // no Exchange anywhere in the physical plan — the scale contract
-    val plan = sampled.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"sampling introduced a shuffle:\n$plan")
-    val n = sampled.count()
-    // 0x29/256 ≈ 16% of 100 ids; md5 is uniform, allow a wide band
-    assert(n >= 4 && n <= 35, s"rate off: $n/100")
-  }
-
   test("vocabulary: exact tf/df on a hand-checked corpus") {
     import spark.implicits._
     val tiny = Seq((1L, "a b a"), (2L, "a c"), (3L, "b  b")).toDF("id", "text")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +19,34 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
   }
 
+  // The pipelines as the queries run them: a materialized row-local
+  // stage (q37 sigs, q38 bits, q69 postings, q41 buckets) feeding the
+  // relational core.
+  private def minhashPairs(df: DataFrame, threshold: Double) =
+    Dedup.minhashNearDupsFromSigs(Dedup.minhashSigs(df, "doc_id", "text"),
+      threshold, bands = 16, rowsPerBand = 4)
+
+  private def ngramPairs(df: DataFrame, threshold: Double, maxDf: Long) =
+    Dedup.ngramJaccardNearDupsFromPostings(
+      Dedup.ngramPostings(df, "doc_id", "text", k = 3), threshold, maxDf,
+      assumeDistinct = true)
+
+  private def simhashPairs(df: DataFrame, maxHamming: Int) =
+    Dedup.simhashNearDupsFromBits(
+      df.select(col("doc_id").as("id"), Dedup.simhashUdf(col("text")).as("bits")),
+      maxHamming)
+
+  /** Min-id survivor per connected component of the near-dup pair graph:
+    * the connectedComponents + anti-join tail. */
+  private def survivors(df: DataFrame, pairs: DataFrame) = {
+    val losers = Dedup.connectedComponents(pairs.select("id_a", "id_b"))
+      .filter(col("id") =!= col("comp")).select(col("id").as("doc_id"))
+    df.join(losers, Seq("doc_id"), "left_anti")
+  }
+
+  private def minhashSurvivors(df: DataFrame, threshold: Double) =
+    survivors(df, minhashPairs(df, threshold))
+
   test("exact dedup: min-id survivor per identical text") {
     val surv = Dedup.exactSurvivors(docs, "text", "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -31,19 +59,20 @@ class DedupSpec extends AnyFunSuite {
 
   test("word shingles") {
     import spark.implicits._
+    // the shingling UDF q37's signatures and q69's postings run
     val sh = Seq(("a b c d")).toDF("t")
-      .select(Dedup.wordShingles(split(col("t"), " "), 2).as("sh"))
+      .select(Dedup.shinglesUdf(2)(col("t")).as("sh"))
       .collect().head.getSeq[String](0)
     assert(sh == Seq("a b", "b c", "c d"))
     // short text falls back to whole-string shingle
     val short = Seq(("a b")).toDF("t")
-      .select(Dedup.wordShingles(split(col("t"), " "), 3).as("sh"))
+      .select(Dedup.shinglesUdf(3)(col("t")).as("sh"))
       .collect().head.getSeq[String](0)
     assert(short == Seq("a b"))
   }
 
   test("minhash LSH finds exact and near duplicates, not unrelated pairs") {
-    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)
+    val pairs = minhashPairs(docs, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val pairSet = pairs.map(p => (p._1, p._2)).toSet
     assert(pairSet.contains((1L, 4L))) // exact dup: jaccard 1.0
@@ -54,8 +83,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngram Jaccard posting-list pairs match brute-force all-pairs Jaccard") {
-    val got = Dedup.ngramJaccardNearDups(docs, "doc_id", "text",
-      threshold = 0.5, k = 3, maxDf = 4)
+    val got = ngramPairs(docs, threshold = 0.5, maxDf = 4)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // brute force: every pair, exact set Jaccard over the same shingles
     val sh = docs.select(col("doc_id"),
@@ -92,20 +120,19 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngram survivors keep one doc per near-dup component") {
-    val surv = Dedup.ngramSurvivors(docs, "doc_id", "text", threshold = 0.5)
+    val surv = survivors(docs, ngramPairs(docs, threshold = 0.5, maxDf = 4))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(surv == Set(1L, 3L, 5L)) // {1,2,4} collapse to min id 1
   }
 
   test("ngram Jaccard df cap drops candidates from stopword-like shingles only") {
     // with maxDf = 1 every shared shingle is over-cap → no candidates at all
-    val none = Dedup.ngramJaccardNearDups(docs, "doc_id", "text",
-      threshold = 0.5, k = 3, maxDf = 1)
+    val none = ngramPairs(docs, threshold = 0.5, maxDf = 1)
     assert(none.count() == 0)
   }
 
   test("minhash survivors drop later near-dups") {
-    val surv = Dedup.minhashSurvivors(docs, "doc_id", "text", threshold = 0.5)
+    val surv = minhashSurvivors(docs, threshold = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(surv == Set(1L, 3L, 5L))
   }
@@ -114,10 +141,10 @@ class DedupSpec extends AnyFunSuite {
     // NB: simhash hamming for a one-token edit on a ~13-token doc is large
     // (each vote is a sum of few ±1s), so only the exact pair is asserted;
     // the near-dup use case needs MinHash (above) for short docs.
-    val pairs = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 64)
+    val pairs = simhashPairs(docs, maxHamming = 64)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(pairs((1L, 4L)) == 0)
-    val tight = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3)
+    val tight = simhashPairs(docs, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(tight.contains((1L, 4L)))
     assert(!tight.exists { case (a, b) => Set(a, b).contains(3L) })
@@ -128,7 +155,7 @@ class DedupSpec extends AnyFunSuite {
     val base = (1 to 80).map(i => s"tok$i").mkString(" ")
     val edited = base.replace("tok40", "changed")
     val ldocs = Seq((1L, base), (2L, edited)).toDF("doc_id", "text")
-    val h = Dedup.simhashNearDups(ldocs, "doc_id", "text", maxHamming = 64)
+    val h = simhashPairs(ldocs, maxHamming = 64)
       .collect().map(r => r.getInt(2)).headOption
     // one token of 80 changed → few vote flips expected; assert generous bound
     h.foreach(d => assert(d <= 20, s"hamming $d unexpectedly large"))
@@ -140,8 +167,9 @@ class DedupSpec extends AnyFunSuite {
     val base = (0 until 50).map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
     val copies = base.take(3).map { case (id, v) => (id + 1000L, v.clone()) }
     val df = (base ++ copies).toDF("vec_id", "embedding")
-    val pairs = Dedup.embeddingNearDups(df, "vec_id", "embedding",
-      threshold = 0.99, bits = 6, dim = 16)
+    val pairs = Dedup.embeddingNearDupsFromBuckets(
+        Dedup.embeddingBuckets(df, "vec_id", "embedding", bits = 6, dim = 16),
+        threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(Set((0L, 1000L), (1L, 1001L), (2L, 1002L)).subsetOf(pairs))
   }
@@ -233,12 +261,12 @@ class DedupSpec extends AnyFunSuite {
     val chain = Seq((1L, base), (2L, mid), (3L, far),
       (9L, "totally different text about nothing in particular at all here"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashNearDups(chain, "doc_id", "text", threshold = 0.7)
+    val pairs = minhashPairs(chain, threshold = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)) && pairs.contains((2L, 3L)) &&
       !pairs.contains((1L, 3L)),
       s"fixture did not produce the open chain (pairs=$pairs)")
-    val surv = Dedup.minhashSurvivors(chain, "doc_id", "text", threshold = 0.7)
+    val surv = minhashSurvivors(chain, threshold = 0.7)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val expectedLosers = pairs.flatMap(p => Seq(p._1, p._2)) --
       ufComponents(pairs.toSeq).values.toSet

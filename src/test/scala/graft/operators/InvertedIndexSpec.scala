@@ -11,6 +11,11 @@ class InvertedIndexSpec extends AnyFunSuite {
   private lazy val docs =
     graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
 
+  // the base store the first test writes is the one the pruning test scans
+  private lazy val storeDir =
+    java.nio.file.Files.createTempDirectory("graft-invidx").toString
+  private lazy val basePath = s"$storeDir/test-invidx-base"
+
   private def searchPairs(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -20,10 +25,10 @@ class InvertedIndexSpec extends AnyFunSuite {
     val delta = docs.filter(col("doc_id") % 10 === 7)
     val bp = InvertedIndex.segmentCached(
       InvertedIndex.postings(base, "doc_id", "text"),
-      "/root/repo/target/test-invidx-base")
+      basePath)
     val dp = InvertedIndex.segmentCached(
       InvertedIndex.postings(delta, "doc_id", "text"),
-      "/root/repo/target/test-invidx-delta")
+      s"$storeDir/test-invidx-delta")
     Seq(Seq("hash", "join"), Seq("table", "hash"), Seq("a", "a")).foreach { ph =>
       val stored = searchPairs(
         InvertedIndex.phraseSearchStored(spark, Seq(bp, dp), ph)
@@ -44,7 +49,7 @@ class InvertedIndexSpec extends AnyFunSuite {
   }
 
   test("bucket pruning: a phrase query scans only its terms' bucket dirs") {
-    val path = "/root/repo/target/test-invidx-base"
+    val path = basePath
     val all = spark.read.parquet(s"$path/postings")
     val total = graft.sources.StructureStore.filesScanned(all, "test-invidx-base")
     val pruned = graft.sources.StructureStore.filesScanned(

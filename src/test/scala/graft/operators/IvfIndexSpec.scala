@@ -39,7 +39,7 @@ class IvfIndexSpec extends AnyFunSuite {
   }
 
   test("persisted per-cell layout: probes prune files at the scan") {
-    val path = "/root/repo/target/test-ivf-store"
+    val path = java.nio.file.Files.createTempDirectory("test-ivf-store").toString
     val index = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
     IvfIndex.write(index, path)
 
@@ -48,8 +48,9 @@ class IvfIndexSpec extends AnyFunSuite {
 
     val queries = emb.filter(col("vec_id") < 3)
     val nprobe = 2
-    val stored = IvfIndex.topKStored(spark, path, queries, "vec_id", "embedding",
-      k = 5, nprobe = nprobe)
+    // the probe list + search over the loaded store, as q54 runs them
+    val probes = IvfIndex.probes(loaded, queries, "vec_id", "embedding", nprobe)
+    val stored = IvfIndex.topKStoredWithProbes(loaded, probes, k = 5)
     // same results as searching the in-memory index
     val inMem = IvfIndex.topK(index, queries, "vec_id", "embedding", k = 5, nprobe = nprobe)
       .select("query_id", "corpus_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -61,11 +62,9 @@ class IvfIndexSpec extends AnyFunSuite {
     // cells' files, a full scan of the assigned corpus reads them all
     val assigned = spark.read.parquet(s"$path/assigned")
     val totalFiles = graft.sources.StructureStore.filesScanned(assigned, "test-ivf-store")
-    val probedCells = IvfIndex.probes(loaded, queries, "vec_id", "embedding", nprobe)
-      .select("cell").distinct().count()
+    val probedCells = probes.select("cell").distinct().count()
     val scanned = graft.sources.StructureStore.filesScanned(
-      IvfIndex.topKStored(spark, path, queries, "vec_id", "embedding", 5, nprobe),
-      "test-ivf-store")
+      IvfIndex.topKStoredWithProbes(loaded, probes, k = 5), "test-ivf-store")
     assert(probedCells < 8, s"fixture degenerate: all cells probed")
     assert(scanned > 0 && scanned < totalFiles,
       s"scan not pruned: $scanned of $totalFiles files for $probedCells/8 cells")
@@ -92,8 +91,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val index = IvfIndex.build(base, "vec_id", "embedding", nlist = 8)
     val deltaAssigned = IvfIndex.assignToCentroids(index, delta, "vec_id", "embedding")
 
-    val basePath = "/root/repo/target/test-ivf-incr-base"
-    val segPath = "/root/repo/target/test-ivf-incr-seg"
+    val basePath = java.nio.file.Files.createTempDirectory("test-ivf-incr-base").toString
+    val segPath = java.nio.file.Files.createTempDirectory("test-ivf-incr-seg").toString
     IvfIndex.write(index, basePath)
     graft.sources.StructureStore.writePartitioned(
       deltaAssigned, s"$segPath/assigned", "cell")

@@ -194,7 +194,7 @@ class MultimodalSpec extends AnyFunSuite {
       Array.tabulate(12)(i => Seq(r, g, b)(i % 3).toByte))
     val stream = Multimodal.PpmStreamCodec.encode(
       Seq(solid(255, 0, 0), solid(255, 255, 255)))
-    assert(Multimodal.PpmStreamCodec.frameCount(stream) == 2)
+    assert(Multimodal.PpmStreamCodec.frameOffsets(stream).size == 2)
     val f = Multimodal.PpmStreamCodec.decode(stream)
     assert(math.abs(f(0) - 1.0f) < 1e-6)            // mean R
     assert(math.abs(f(1) - 0.5f) < 1e-6)            // mean G
@@ -205,12 +205,17 @@ class MultimodalSpec extends AnyFunSuite {
     assert(math.abs(f(6) - 1.0f) < 1e-6 && f(7) == 0f)
   }
 
-  test("PPM stream: frameAt round-trips standalone decodable frames") {
+  test("PPM stream: extractFrames round-trips standalone decodable frames") {
+    import spark.implicits._
     val frames = (0 until 3).map(i => Multimodal.PpmCodec.encode(2, 1,
       Array.fill(6)((40 * i).toByte)))
     val stream = Multimodal.PpmStreamCodec.encode(frames)
-    (0 until 3).foreach { i =>
-      val fr = Multimodal.PpmStreamCodec.frameAt(stream, i)
+    val got = Multimodal.extractFrames(
+        Seq((1L, "video", stream)).toDF("media_id", "kind", "content"))
+      .collect().map(r => r.getInt(1) -> r.getAs[Array[Byte]]("frame_content"))
+      .sortBy(_._1)
+    assert(got.map(_._1).toSeq == Seq(0, 1, 2))
+    got.foreach { case (i, fr) =>
       assert(fr.sameElements(frames(i)))
       assert(Multimodal.PpmCodec.decode(fr).length == Multimodal.FeatureDim)
     }
@@ -262,7 +267,9 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("binary dedup collapses identical content") {
-    val deduped = Multimodal.dedupByContent(media)
+    // the min-id-per-md5 survivor rule over the binary payload column
+    // (q301 groups media payloads by md5 the same way)
+    val deduped = Dedup.exactSurvivors(media, "content", "media_id")
     assert(deduped.count() == 3)
     val ids = deduped.select("media_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(0L, 1L, 2L)) // min id survives for the dup pair

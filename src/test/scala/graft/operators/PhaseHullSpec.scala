@@ -75,24 +75,4 @@ class PhaseHullSpec extends AnyFunSuite {
       }
     }
   }
-
-  test("eAboveHullAll: distributed operator over grouped systems") {
-    import spark.implicits._
-    val refs = Seq(
-      ("A-B", Seq(1.0, 0.0), 0.0), ("A-B", Seq(0.0, 1.0), 0.0),
-      ("A-B", Seq(0.5, 0.5), -0.3),
-      ("X-Y", Seq(1.0, 0.0), 0.0), ("X-Y", Seq(0.0, 1.0), 0.0))
-      .toDF("system", "fracs", "e_per_atom")
-    val cands = Seq(
-      ("A-B", 1L, Seq(0.5, 0.5), -0.2),   // 0.1 above hull
-      ("A-B", 2L, Seq(0.75, 0.25), -0.15), // hull -0.15 → exactly on
-      ("X-Y", 3L, Seq(0.5, 0.5), -0.1))   // hull 0 → below (new phase)
-      .toDF("system", "id", "fracs", "e_per_atom")
-    val got = PhaseHull.eAboveHullAll(cands, refs)
-      .select("id", "e_above_hull").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(math.abs(got(1L) - 0.1) < 1e-9)
-    assert(math.abs(got(2L)) < 1e-9)
-    assert(math.abs(got(3L) - (-0.1)) < 1e-9)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,16 +24,29 @@ class SimilaritySpec extends AnyFunSuite {
     assert(topk.filter(_.getLong(0) == 0L).map(_.getInt(3)).sorted.toSeq == Seq(1, 2, 3, 4, 5))
   }
 
+  /** Sign-LSH top-k as q40 runs it: bucket the corpus, probe each
+    * query's [[Similarity.multiprobe]] list, rank the candidates. */
+  private def lshTopK(queries: DataFrame, k: Int, bits: Int): Set[(Long, Long)] = {
+    val planes = Dedup.hyperplanes(64, bits)
+    val corpus = emb.select(col("vec_id").as("corpus_id"),
+        col("embedding").cast("array<double>").as("cv"))
+      .withColumn("bucket", Dedup.signBucket(col("cv"), planes))
+    val probes = queries.select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<double>").as("qv"))
+      .withColumn("qbucket", Dedup.signBucket(col("qv"), planes))
+      .withColumn("probe", explode(Similarity.multiprobe(col("qbucket"), bits)))
+    Similarity.rankTopK(
+        corpus.join(broadcast(probes), col("bucket") === col("probe"))
+          .select(col("query_id"), col("qv"), col("corpus_id"), col("cv")), k)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
   test("LSH ANN recall vs exact baseline; recall rises with fewer bits") {
     val queries = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(queries, emb, "vec_id", "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recallAt(bits: Int): Double = {
-      val ann = Similarity.lshTopK(queries, emb, "vec_id", "vec_id", "embedding", 5,
-        bits = bits, dim = 64)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      (exact & ann).size.toDouble / exact.size
-    }
+    def recallAt(bits: Int): Double =
+      (exact & lshTopK(queries, 5, bits)).size.toDouble / exact.size
     // random 64-d vectors are near-orthogonal — the hardest case for
     // sign-LSH; coarse buckets must still beat fine ones and clear a floor
     val r4 = recallAt(4)
@@ -41,26 +54,28 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r4 >= 0.5, s"recall@4bits too low: $r4")
     assert(r4 >= r8, s"coarser buckets should not lose recall: $r4 < $r8")
     // self-match always survives (identical vector → identical bucket)
-    val ann4 = Similarity.lshTopK(queries, emb, "vec_id", "vec_id", "embedding", 5,
-      bits = 4, dim = 64).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ann4 = lshTopK(queries, 5, bits = 4)
     (0L until 10L).foreach(q => assert(ann4.contains((q, q))))
   }
 
   test("knn majority prediction is deterministic and labeled from corpus") {
-    val pred = Similarity.knnPredict(
-      emb.filter(col("vec_id") < 5), emb.filter(col("vec_id") >= 5),
-      "vec_id", "vec_id", "embedding", "label", k = 9)
-      .collect()
+    // rankTopK + majorityVote, the tail q42 runs (exact retrieval here)
+    def predict() = {
+      val corpus = emb.filter(col("vec_id") >= 5)
+      val topk = Similarity.bruteForceTopK(emb.filter(col("vec_id") < 5),
+        corpus, "vec_id", "vec_id", "embedding", k = 9)
+      Similarity.majorityVote(topk,
+          corpus.select(col("vec_id").as("corpus_id"), col("label")))
+        .collect()
+    }
+    val pred = predict()
     assert(pred.length == 5)
     pred.foreach { r =>
       assert(r.getInt(1) >= 0 && r.getInt(1) <= 9)
       assert(r.getLong(2) >= 1 && r.getLong(2) <= 9)
     }
     // determinism: second run identical
-    val pred2 = Similarity.knnPredict(
-      emb.filter(col("vec_id") < 5), emb.filter(col("vec_id") >= 5),
-      "vec_id", "vec_id", "embedding", "label", k = 9)
-      .collect()
+    val pred2 = predict()
     assert(pred.map(_.toString).toSeq == pred2.map(_.toString).toSeq)
   }
 

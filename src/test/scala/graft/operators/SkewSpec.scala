@@ -32,14 +32,6 @@ class SkewSpec extends AnyFunSuite {
     assert(saltSpread > 4)
   }
 
-  test("keySkew surfaces the heavy hitter with its share") {
-    import spark.implicits._
-    val df = ((1 to 90).map(_ => "hot") ++ (1 to 10).map(i => s"k$i")).toDF("k")
-    val top = Skew.keySkew(df, "k", topK = 1).collect().head
-    assert(top.getString(0) == "hot")
-    assert(math.abs(top.getDouble(2) - 0.9) < 1e-12)
-  }
-
   test("AQE skew-join splits the hot partition at runtime (the automatic path)") {
     import spark.implicits._
     // AQE skew handling fires on sort-merge joins whose partitions exceed

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,18 +16,20 @@ class TableSyncSpec extends AnyFunSuite {
   private val keyH = TableSync.rowHash(Seq(col("k")))
   private val rowH = TableSync.rowHash(Seq(col("k"), col("v1"), col("v2")))
 
+  /** (bucket, old side digest, new side digest) per bucket. */
+  private def digests(oldRows: Seq[(Long, Long, Long)], newDf: DataFrame,
+                      buckets: Int) =
+    TableSync.bucketDigests(table(oldRows), newDf, keyH, rowH, buckets)
+      .collect().map(r => r.getLong(0) ->
+        (((r.getLong(1), r.getLong(2), r.getLong(3)),
+          (r.getLong(4), r.getLong(5), r.getLong(6))))).toMap
+
   test("digest is order- and partitioning-independent") {
     val rows = (1L to 500L).map(k => (k, k * 3, k % 17))
-    val a = TableSync.bucketDigest(table(rows), keyH, rowH, 16)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    val b = TableSync.bucketDigest(
-        table(scala.util.Random.shuffle(rows)).repartition(7), keyH, rowH, 16)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(a == b)
+    val d = digests(rows,
+      table(scala.util.Random.shuffle(rows)).repartition(7), 16)
+    assert(d.size == 16)
+    d.foreach { case (bucket, (o, n)) => assert(o == n, s"bucket $bucket") }
   }
 
   test("limb sums reconstruct the full-width hash sum exactly") {
@@ -39,8 +41,8 @@ class TableSyncSpec extends AnyFunSuite {
       .select(pmod(keyH, lit(16L)).as("bucket"), rowH.as("h"))
       .groupBy("bucket").agg(sum(col("h")).as("hsum")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val limbs = TableSync.bucketDigest(table(rows), keyH, rowH, 16).collect()
-      .map(r => r.getLong(0) -> (r.getLong(2) + 65536L * r.getLong(3))).toMap
+    val limbs = digests(rows, table(rows), 16)
+      .map { case (bucket, ((_, lo, hi), _)) => bucket -> (lo + 65536L * hi) }
     assert(limbs == full)
   }
 
@@ -49,9 +51,8 @@ class TableSyncSpec extends AnyFunSuite {
     val edited = rows.map { case (k, v1, v2) =>
       if (k == 137L) (k, v1 + 1, v2) else (k, v1, v2)
     }
-    val dirty = TableSync.dirtyBuckets(
-      TableSync.bucketDigest(table(rows), keyH, rowH, 16),
-      TableSync.bucketDigest(table(edited), keyH, rowH, 16)).collect()
+    val dirty = TableSync.dirtyBuckets(TableSync.bucketDigests(
+      table(rows), table(edited), keyH, rowH, 16)).collect()
     assert(dirty.length == 1)
   }
 
@@ -99,16 +100,15 @@ class TableSyncSpec extends AnyFunSuite {
 
   test("identical snapshots: no dirty buckets, empty diff") {
     val rows = (1L to 300L).map(k => (k, k, k))
-    assert(TableSync.dirtyBuckets(
-      TableSync.bucketDigest(table(rows), keyH, rowH, 8),
-      TableSync.bucketDigest(table(rows), keyH, rowH, 8)).isEmpty)
+    assert(TableSync.dirtyBuckets(TableSync.bucketDigests(
+      table(rows), table(rows), keyH, rowH, 8)).isEmpty)
     assert(TableSync.syncDiff(table(rows), table(rows), keyH, rowH, 8,
       Seq("k"), Seq("v1", "v2")).isEmpty)
   }
 
   test("negative values hash without ANSI overflow (arithmetic-shift halves)") {
     val rows = Seq((-5L, -1000000000000L, Long.MinValue + 3), (2L, 0L, -1L))
-    val d = TableSync.bucketDigest(table(rows), keyH, rowH, 4).collect()
-    assert(d.map(_.getLong(1)).sum == 2L)
+    val d = digests(rows, table(rows), 4)
+    assert(d.values.map { case ((nOld, _, _), (nNew, _, _)) => nOld + nNew }.sum == 4L)
   }
 }

@@ -8,7 +8,9 @@ class PagedJsonSourceSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.LocalSession(4)
 
-  private val dbPath = "/root/repo/target/test-paged-json/provider.jsonl"
+  private lazy val dbDir =
+    java.nio.file.Files.createTempDirectory("test-paged-json").toString
+  private lazy val dbPath = s"$dbDir/provider.jsonl"
   private val ddl = "id BIGINT, name STRING, band_gap DOUBLE, elements ARRAY<STRING>"
 
   private def writeDb(): Unit =
@@ -76,7 +78,7 @@ class PagedJsonSourceSpec extends AnyFunSuite {
   }
 
   test("pushed equality on BIGINT beyond 2^53 stays exact") {
-    val bigPath = "/root/repo/target/test-paged-json/big.jsonl"
+    val bigPath = s"$dbDir/big.jsonl"
     val a = (1L << 53) + 1 // collapses onto 2^53 as a double
     val b = 1L << 53
     PagedJsonClient.writeJsonl(
