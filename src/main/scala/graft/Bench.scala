@@ -82,8 +82,8 @@ object Bench {
         // flat across 239 queries (rule 3 of docs/CACHE_POLICY.md —
         // catalog cache AND the RDD-level localCheckpoints the catalog
         // never tracks, which accumulated ~90 MB/pass in round 9).
-        // Aux.share/shareBuilt stages are parquet-backed (write-once
-        // memo) and unaffected.
+        // Aux.share/shareBuilt stages are parquet-backed (Aux.writeOnce)
+        // and unaffected.
         Caches.releaseAll(spark)
         if (ok) sec else -1.0
       }

@@ -440,12 +440,11 @@ object BenchScale {
         // SKEWED-HUB stress for the CC star minima: ONE global hub
         // owns ~20% of all edges at every k (hub degree grows k× with
         // the row count — the power-law celebrity case), the rest is
-        // a sparse id chain. Guards the default window shape's alpha
-        // under skew; the r13 A/B of window vs the skewSafeMinima
-        // groupBy+join-back shape on this fixture is recorded in
-        // OPTIMIZATION_r13.md (window 6.5 s vs 7.9 s at k16 — the
-        // hub task only becomes the stage at ~10^7+ rows on one key,
-        // which is when callers flip skewSafeMinima).
+        // a sparse id chain. Guards the window shape's alpha under
+        // skew; the r13 A/B of window vs a groupBy+join-back shape on
+        // this fixture is recorded in OPTIMIZATION_r13.md (window 6.5 s
+        // vs 7.9 s at k16 — the hub task only becomes the stage at
+        // ~10^7+ rows on one key; the groupBy shape was deleted).
         val e = spark.read.parquet(s"$scratch/k$k/events.parquet")
         val ids = e.select((col("user_id") * 17 + col("event_id") % 13)
           .as("id")).distinct()

@@ -21,8 +21,7 @@ import graft.functions.HillFormulaExpr
   * session built with the extension. SQL names are the only thing the
   * catalog is for: the Column API (`GraftFunctions.hill_formula`) builds
   * the expression directly through `ExpressionBridge` and needs no
-  * registration. Sessions built without the extension get the same SQL
-  * name from `GraftFunctions.registerAll`.
+  * registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -36,7 +36,7 @@ object Verify {
       // Cache hygiene (VERDICT r8; rule 3 of docs/CACHE_POLICY.md):
       // query-scoped persists otherwise accumulate across 255 queries
       // in this one JVM. Aux.share/shareBuilt stages are parquet-backed
-      // and unaffected (their `written` memo skips the rewrite; readers
+      // and unaffected (Aux.writeOnce skips the rewrite; readers
       // re-read from disk). The sweep also frees iterative operators'
       // per-round localCheckpoints, which the catalog cache never
       // tracks.

@@ -35,8 +35,10 @@ object DomainFunctions {
     "Pu" -> -14.2678)
 
   /** Formation energy per atom: (E − Σ ref[site element]) / natoms, over the
-    * per-site species list (openlam utils.py:107-115). None if any element
-    * lacks a reference energy or the site list is empty. */
+    * per-site species list (openlam_database/openlam/lam_optimize/utils.py:107-115).
+    * None if any element lacks a reference energy or the site list is
+    * empty. No query calls this JVM port; q23 runs the Column form,
+    * GraftFunctions.e_form_per_atom. */
   def eFormPerAtom(speciesAtSites: Seq[String], energy: Double): Option[Double] =
     if (speciesAtSites == null || speciesAtSites.isEmpty) None
     else {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
@@ -55,13 +55,11 @@ object GraftFunctions {
   def int_sqdist(a: Column, b: Column): Column =
     column(IntSqdistExpr(expression(a), expression(b)))
 
-  // F4 — space-group number → short HM / unicode symbol via map literals
+  // F4 — space-group number → short HM symbol via a map literal
   private lazy val shortHMCol: Column =
     typedlit(SpaceGroups.shortHM.zipWithIndex.map { case (s, i) => (i + 1) -> s }.toMap)
-  private lazy val unicodeCol: Column = typedlit(SpaceGroups.unicodeSymbol)
 
   def spg_short_hm(n: Column): Column = element_at(shortHMCol, n.cast("int"))
-  def spg_unicode(n: Column): Column  = element_at(unicodeCol, n.cast("int"))
 
   private val tcodUdf = udf((s: String) =>
     if (s == null) null else SpaceGroups.toTcodFormat(s))
@@ -82,21 +80,4 @@ object GraftFunctions {
   /** F11 — stable run ids: sha1(filter)[:8], a port of the reference's
     * run-id hash (optimade_database/Optimade_Server/server.py:137). */
   def run_id(c: Column): Column = substring(sha1(c), 1, 8)
-
-  /** SQL-name registration so `spark.sql` surfaces can call these. */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("normalize_formula",
-      (s: String) => if (s == null) null else Formulas.normalizeFormula(s))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hill_formula", exprs => HillFormulaExpr(exprs.head), "scala_udf")
-    spark.udf.register("spg_short_hm",
-      (n: Int) => SpaceGroups.fromNumber(n).orNull)
-    spark.udf.register("spg_unicode",
-      (n: Int) => SpaceGroups.unicodeSymbol.get(n).orNull)
-    spark.udf.register("spg_tcod",
-      (s: String) => if (s == null) null else SpaceGroups.toTcodFormat(s))
-    spark.udf.register("e_form_per_atom",
-      (species: Seq[String], energy: Double) =>
-        DomainFunctions.eFormPerAtom(species, energy).map(Double.box).orNull)
-  }
 }

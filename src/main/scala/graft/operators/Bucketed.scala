@@ -17,9 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a content change writes a NEW table instead of rewriting one that
   * concurrent readers may hold open — the r03-q47 rewrite-race class
   * is structurally impossible, and the stamp check doubles as the
-  * cross-session cache hit. Completeness is the parquet _SUCCESS
-  * marker (a killed write leaves no marker and is redone), with the
-  * write serialized under Aux.writeStamped's cross-JVM file lock.
+  * cross-session cache hit. The write goes through the write-once
+  * store [[graft.Aux.writeOnce]]; completeness is the parquet _SUCCESS
+  * marker (a killed write leaves no marker and is redone).
   *
   * The no-shuffle claim is machine-checked in BucketedSpec (zero
   * ShuffleExchange nodes in the executed join plan); q103's oracle
@@ -27,8 +27,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of the plain join over the raw parquet.
   */
 object Bucketed {
-
-  private val written = scala.collection.mutable.Set.empty[String]
 
   /** Save `df` as an EXTERNAL bucketed table; returns the table name.
     * Idempotent per content: same data+key+buckets reuses the on-disk
@@ -48,27 +46,19 @@ object Bucketed {
       s"""CREATE TABLE $tbl (${df.schema.toDDL}) USING PARQUET
          |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $nBuckets BUCKETS
          |LOCATION '${dir.toUri}'""".stripMargin)
-    written.synchronized {
-      if (!written.contains(tbl)) {
-        graft.Aux.writeStamped(
-          dir.resolveSibling(tbl + "._bversion"),
-          dir.resolveSibling(tbl + "._block"),
-          stamp,
-          complete = java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          if (java.nio.file.Files.exists(dir)) { // orphan of a killed write
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(java.nio.file.Files.delete)
-          }
-          java.nio.file.Files.createDirectories(dir) // CREATE TABLE lists it
-          registerDdl()
-          df.write.mode("overwrite").insertInto(tbl)
-        }
-        if (!spark.catalog.tableExists(tbl)) registerDdl() // fresh JVM, warm dir
-        written += tbl
+    graft.Aux.writeOnce(dir.toString, stamp,
+        java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      if (java.nio.file.Files.exists(dir)) { // orphan of a killed write
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+          .iterator().asScala.foreach(java.nio.file.Files.delete)
       }
+      java.nio.file.Files.createDirectories(dir) // CREATE TABLE lists it
+      registerDdl()
+      df.write.mode("overwrite").insertInto(tbl)
     }
+    if (!spark.catalog.tableExists(tbl)) registerDdl() // fresh session, warm dir
     tbl
   }
 

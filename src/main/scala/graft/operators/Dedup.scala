@@ -362,8 +362,7 @@ object Dedup {
     *
     * @return (id, comp) for every vertex that appears in a pair; comp is
     *         the min id of its component. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          skewSafeMinima: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     // Materialize the PAIR list first and derive nodes + edges from it:
     // deriving both straight from `pairs` would run the (possibly
     // expensive) upstream lineage once per consumer (the PageRank
@@ -378,33 +377,17 @@ object Dedup {
         .filter(col("a") =!= col("b")).distinct())
     var it = 0
     var converged = edges.isEmpty // nothing but self-pairs: already stars
-    // Per-neighborhood star minima, two shapes (r13 optimization
-    // round, measured head-to-head — OPTIMIZATION_r13.md):
-    //
-    // DEFAULT (skewSafeMinima = false): the r12 PARTITIONED-window
-    // shape — min() OVER the key partition rides ONE edge-list
-    // exchange per star (guide §2.4) and AQE reuses the materialized
-    // stage across the union branches. Fastest measured at every
+    // Per-neighborhood star minima: min() OVER the key partition rides
+    // ONE edge-list exchange per star (guide §2.4) and AQE reuses the
+    // materialized stage across the union branches. The r13 A/B
+    // (OPTIMIZATION_r13.md) measured it against a partial-aggregated
+    // groupBy-min + join-back shape and found the window faster at every
     // reachable scale, including an adversarial one-hub-owns-20%-of-
-    // edges fixture (BenchScale components_hub: window 6.5 s vs
-    // groupBy shape 7.9 s at k16; q290 2.92 vs 3.15 s, q299 3.11 vs
-    // 3.29 s same-host medians-of-7).
-    //
-    // skewSafeMinima = true: partial-aggregated groupBy-min + plain
-    // node-keyed join-back. The window shape concentrates a hub's
-    // ENTIRE neighborhood in one window task that neither partial
-    // aggregation nor AQE skew handling can split (guide §2.5) — at
-    // ~10^7+ rows on one key that task is the stage; the groupBy's
-    // map-side combine collapses the hub per map partition and the
-    // join-back is AQE skew-join eligible. Costs one extra join stage
-    // per star, which is why it is opt-in for power-law deployments
-    // rather than the default. (A broadcast(minima) join-back was
-    // also measured: WORSE locally — two blocking broadcast builds
-    // per round, q290 3.74 s / q299 3.57 s — and a node-sized-
-    // broadcast memory cliff at scale; rejected.)
-    //
-    // Same min per group either way — bit-identical rounds (DedupSpec
-    // pins the skew-safe path against union-find).
+    // edges fixture (BenchScale components_hub: window 6.5 s vs groupBy
+    // shape 7.9 s at k16; q290 2.92 vs 3.15 s, q299 3.11 vs 3.29 s
+    // same-host medians-of-7). The window puts a hub's ENTIRE
+    // neighborhood in one window task (guide §2.5); that task becomes
+    // the stage only at ~10^7+ rows on one key, which no query reaches.
     import org.apache.spark.sql.expressions.Window
     while (!converged && it < maxIter) {
       // large-star over the symmetrized neighborhood: m ≤ u < v, so the
@@ -412,12 +395,8 @@ object Dedup {
       // rw = 1 marks an edge the star actually moved (m != u)
       val sym = edges.select(col("a").as("u"), col("b").as("v"))
         .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
-      val large = (if (skewSafeMinima)
-          sym.join(sym.groupBy("u").agg(min(col("v")).as("_mv")), "u")
-            .withColumn("m", least(col("u"), col("_mv")))
-        else
-          sym.withColumn("m",
-            least(col("u"), min(col("v")).over(Window.partitionBy("u")))))
+      val large = sym
+        .withColumn("m", least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
         .filter(col("v") > col("u"))
         .select(col("m").as("a"), col("v").as("b"),
           (col("m") =!= col("u")).cast("long").as("rw"))
@@ -426,11 +405,7 @@ object Dedup {
       // (m, a) rows are rewires by definition (only emitted when a != m),
       // (m, b) rows are rewires when b's parent changed (m != a) or the
       // edge was already moved by the large star this round
-      val small =
-        if (skewSafeMinima)
-          large.join(large.groupBy("b").agg(min(col("a")).as("m")), "b")
-        else
-          large.withColumn("m", min(col("a")).over(Window.partitionBy("b")))
+      val small = large.withColumn("m", min(col("a")).over(Window.partitionBy("b")))
       val next = Iterate.materialize(
         small.filter(col("a") =!= col("m"))
           .select(col("m").as("a"), col("a").as("b"), lit(1L).as("rw"))

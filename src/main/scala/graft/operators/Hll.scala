@@ -18,7 +18,8 @@ package graft.operators
   *
   * The float estimate (alpha_m·m²/Σ2^−reg + small/large-range
   * corrections) is left OUT of the relational output per the avg-class
-  * ground rule; [[estimate]] is the JVM-side consumer.
+  * ground rule; no query folds the registers to a float, and HllSpec
+  * carries the estimator that checks their accuracy.
   *
   * Scale design: [[HllAgg]] keeps the sketch as one 2^p-byte
   * aggregation buffer per group (q225's rollup and the streaming state
@@ -35,26 +36,5 @@ object Hll {
     val w = h >>> p
     val bitlen = if (w == 0L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(w)
     (idx, 32 - p + 1 - bitlen)
-  }
-
-  /** Standard HLL estimate from a full register vector (length 2^p),
-    * with the small-range (linear counting) and 32-bit large-range
-    * corrections. The JVM-side reader of the vector [[HllAgg]] emits:
-    * the float estimate stays out of relational outputs (avg-class
-    * rule), so a caller that wants a cardinality folds it here. */
-  def estimate(regs: Array[Long]): Double = {
-    val m = regs.length.toDouble
-    val alpha = regs.length match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _ => 0.7213 / (1 + 1.079 / m)
-    }
-    val raw = alpha * m * m / regs.map(r => math.pow(2.0, -r.toDouble)).sum
-    val zeros = regs.count(_ == 0L)
-    if (raw <= 2.5 * m && zeros > 0) m * math.log(m / zeros)
-    else if (raw > (1L << 32).toDouble / 30.0)
-      -(1L << 32).toDouble * math.log1p(-raw / (1L << 32).toDouble)
-    else raw
   }
 }

@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * eval emits the FULL register vector (2^p longs); q214 gates it
   * against a DuckDB oracle rebuilding the identical registers in SQL
   * ([[Kmv.hash32]] chain + `length(bin())` rank — see [[Hll]]). The
-  * float estimate stays out of relational outputs (avg-class rule);
-  * [[Hll.estimate]] consumes the vector JVM-side.
+  * float estimate stays out of relational outputs (avg-class rule).
   */
 case class HllAgg(
     child: Expression,

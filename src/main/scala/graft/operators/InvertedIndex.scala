@@ -37,13 +37,15 @@ object InvertedIndex {
       .filter(col("term") =!= "")
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(NBuckets)))
 
-  /** Write postings as a bucket-partitioned segment (write-once +
-    * content stamp + cross-JVM lock + persist-across-fingerprint-and-
-    * write — [[graft.Aux.shareSegment]], shared with
-    * [[IvfIndex.segmentCached]]). */
-  private val segWritten = scala.collection.mutable.Set.empty[String]
-  def segmentCached(postings: DataFrame, path: String): String =
-    graft.Aux.shareSegment(postings, path, "postings", "bucket", segWritten)
+  /** Write postings as a bucket-partitioned segment under
+    * `path/postings` through the write-once store
+    * [[graft.Aux.writeFrameOnce]]. Returns `path`. */
+  def segmentCached(postings: DataFrame, path: String): String = {
+    graft.Aux.writeFrameOnce(postings, path, java.nio.file.Files.exists(
+        java.nio.file.Paths.get(path, "postings", "_SUCCESS")))(
+      graft.sources.StructureStore.writePartitioned(_, s"$path/postings", "bucket"))
+    path
+  }
 
   /** Phrase search over the UNION of stored segments, bucket-pruned at
     * every scan: same output contract as [[Retrieval.phraseSearch]]

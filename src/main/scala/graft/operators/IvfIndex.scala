@@ -60,7 +60,7 @@ object IvfIndex {
   private def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
 
-  /** Incremental maintenance, step 1: assign a DELTA batch of vectors to
+  /** Incremental maintenance: assign a DELTA batch of vectors to
     * the EXISTING centroids (frozen coarse quantizer — the standard IVF
     * maintenance regime: new vectors are routed by the trained
     * quantizer; refitting would invalidate every stored cell). Output
@@ -92,15 +92,6 @@ object IvfIndex {
           (d, i) => struct(d.as("d"), i.as("cell")))), 1)
         .getField("cell").cast("int").as("cell"))
   }
-
-  /** Incremental maintenance, step 2: persist an assigned delta as a
-    * cell-partitioned SEGMENT next to the base store (the LSM shape —
-    * the base is immutable; a delta batch lands as its own
-    * `cell=N/` tree and search unions the segments, both probe-pruned
-    * at the scan). Write-once + stamp + lock + persist-across-
-    * fingerprint-and-write via [[graft.Aux.shareSegment]]. */
-  def segmentCached(assigned: DataFrame, path: String): String =
-    graft.Aux.shareSegment(assigned, path, "assigned", "cell", storeWritten)
 
   /** (query_id, qv, cell): the per-query probe list — nprobe nearest
     * centroids by squared distance (ranked by (distance, cell) and
@@ -158,12 +149,6 @@ object IvfIndex {
     Index(centroids, spark.read.parquet(s"$path/assigned"))
   }
 
-  /** Paths this JVM already persisted via [[storeCached]] — an index
-    * store is immutable once written (content is deterministic per
-    * (corpus, seed)), so repeat executions in one session skip the
-    * rewrite, exactly like [[graft.Aux.share]]. */
-  private val storeWritten = scala.collection.mutable.Set.empty[String]
-
   /** Content stamp of an index: centroid hash (deterministic k-means
     * output, driver-resident) + the assigned frame's multiset
     * fingerprint. Equal stamps ⇔ the persisted store already holds this
@@ -174,30 +159,13 @@ object IvfIndex {
     s"c$centroidHash-${graft.Aux.fingerprint(index.assigned)}"
   }
 
-  /** Persist `index` at `path` once per session and return the path.
-    * Cross-session safety is the same content-stamp + lock-across-write
-    * discipline as [[graft.Aux.share]] / MofFixtures.registerStar: a new
-    * session whose index content matches the on-disk `_content_version`
-    * SKIPS the rewrite (so it can never race a concurrently running
-    * reader — the q47-of-r03 hazard class), and a cold-start write holds
-    * a cross-JVM file lock so a second session blocks rather than reads
-    * a half-written store. The stamp/lock live at the store ROOT, which
-    * [[write]] does not overwrite (only its `assigned`/`centroids`
-    * subdirs). */
+  /** Persist `index` at `path` and return the path, through the
+    * write-once store [[graft.Aux.writeOnce]] stamped by [[storeStamp]];
+    * complete once the centroid sidecar, which [[write]] writes last,
+    * has its `_SUCCESS`. */
   def storeCached(index: Index, path: String): String = {
-    storeWritten.synchronized {
-      if (!storeWritten.contains(path)) {
-        val root = java.nio.file.Paths.get(path)
-        graft.Aux.writeStamped(root.resolve("_content_version"),
-                               root.resolve("_lock"),
-                               storeStamp(index),
-                               complete = java.nio.file.Files.exists(
-                                 root.resolve("centroids").resolve("_SUCCESS"))) {
-          write(index, path)
-        }
-        storeWritten += path
-      }
-    }
+    graft.Aux.writeOnce(path, storeStamp(index), java.nio.file.Files.exists(
+        java.nio.file.Paths.get(path, "centroids", "_SUCCESS")))(write(index, path))
     path
   }
 

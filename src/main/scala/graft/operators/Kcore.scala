@@ -33,27 +33,19 @@ object Kcore {
     * in-core degree. Parallel edges collapse; self-loops are dropped
     * (a self-loop inflates its node's degree by 2 in no standard
     * definition of coreness). */
-  def kcore(edges: DataFrame, k: Int, maxRounds: Int = 30,
-            skewSafeDegrees: Boolean = false): DataFrame = {
+  def kcore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    // Per-round degrees, two shapes (r13 optimization round, measured
-    // — OPTIMIZATION_r13.md): the DEFAULT keeps the r12 PARTITIONED-
-    // window shape — count() OVER the src partition is each edge's
-    // source degree, the dst window its target degree (the list is
-    // symmetric, so both see the node degree), one filter keeps edges
-    // whose BOTH endpoints survive; two edge exchanges per round,
-    // fastest measured locally. skewSafeDegrees = true swaps in ONE
-    // partial-aggregated degree count joined back on both endpoints:
-    // the window concentrates a hub's whole neighborhood in one
-    // un-splittable window task (guide §2.5), the groupBy's map-side
-    // combine collapses it per map partition and the node-keyed
-    // join-backs are AQE skew-join eligible — opt-in for power-law
-    // graphs (costs two join stages per round, KcoreSpec pins it
-    // against the driver peel). Same induced subgraph per round
-    // either way. Convergence is detected on the EDGE count: a node
-    // leaves the survivor set iff some incident edge was dropped, so
-    // the edge count is fixed iff the survivor set is (the previous
-    // node-count test, same fixpoint).
+    // Per-round degrees (r13 optimization round, measured —
+    // OPTIMIZATION_r13.md): the PARTITIONED-window shape — count() OVER
+    // the src partition is each edge's source degree, the dst window its
+    // target degree (the list is symmetric, so both see the node
+    // degree), one filter keeps edges whose BOTH endpoints survive; two
+    // edge exchanges per round, fastest measured locally (a groupBy
+    // degree count joined back on both endpoints was the other shape).
+    // Convergence is detected on the EDGE count: a node leaves the
+    // survivor set iff some incident edge was dropped, so the edge count
+    // is fixed iff the survivor set is (the previous node-count test,
+    // same fixpoint).
     import org.apache.spark.sql.expressions.Window
     var e = Iterate.materialize(
       edges.select(col("src").cast("long").as("src"),
@@ -66,15 +58,8 @@ object Kcore {
     while (m != prev && m > 0) {
       prev = m
       val survivors =
-        if (skewSafeDegrees) {
-          val deg = e.groupBy("src").agg(count(lit(1)).as("_d"))
-          e.join(deg.select(col("src"), col("_d").as("_ds")), "src")
-            .join(deg.select(col("src").as("dst"), col("_d").as("_dd")),
-              "dst")
-        } else {
-          e.withColumn("_ds", count(lit(1)).over(Window.partitionBy("src")))
-            .withColumn("_dd", count(lit(1)).over(Window.partitionBy("dst")))
-        }
+        e.withColumn("_ds", count(lit(1)).over(Window.partitionBy("src")))
+          .withColumn("_dd", count(lit(1)).over(Window.partitionBy("dst")))
       e = Iterate.materialize(
         survivors
           .filter(col("_ds") >= k && col("_dd") >= k)

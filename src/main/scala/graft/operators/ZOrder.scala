@@ -67,43 +67,30 @@ object ZOrder {
     (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
   }
 
-  // write-once-per-session guard, same pattern as IvfIndex.storeCached
-  private val storeWritten = scala.collection.mutable.Set.empty[String]
+  private def boundsFile(path: String) = java.nio.file.Paths.get(s"$path._zbounds")
 
-  /** Write `df` z-ordered on (xCol, yCol) at `path` (content-stamped +
-    * lock-across-write, once per session — the Aux.share discipline).
-    * Data-derived dim bounds are persisted in a `_zbounds` sidecar next
-    * to the dir so later sessions query with the exact write-time grid.
-    * Returns `path`. */
+  /** Write `df` z-ordered on (xCol, yCol) at `path` through the
+    * write-once store [[graft.Aux.writeFrameOnce]] (stamp: the content
+    * fingerprint and `gridBits`). Data-derived dim bounds are persisted
+    * in a `_zbounds` sidecar next to the dir so later sessions query
+    * with the exact write-time grid. Returns `path`. */
   def store(df: DataFrame, xCol: String, yCol: String,
             gridBits: Int, path: String): String = {
-    storeWritten.synchronized {
-      if (!storeWritten.contains(path)) {
-        val p = java.nio.file.Paths.get(path)
-        df.persist()
-        try {
-          val (xLo, xHi, yLo, yHi) = boundsOf(df, xCol, yCol)
-          require(xHi > xLo && yHi > yLo,
-            s"ZOrder.store needs spread on both dims ($xCol: [$xLo,$xHi], " +
-              s"$yCol: [$yLo,$yHi]) — a constant dim quantizes to NULL cells")
-          val cells = 1 << gridBits
-          graft.Aux.writeStamped(
-            p.resolveSibling(p.getFileName.toString + "._zversion"),
-            p.resolveSibling(p.getFileName.toString + "._zlock"),
-            graft.Aux.fingerprint(df) + s"-g$gridBits",
-            complete = java.nio.file.Files.exists(p.resolve("_SUCCESS"))) {
-            val zb = morton(cellOf(col(xCol), xLo, xHi, cells),
-              cellOf(col(yCol), yLo, yHi, cells), gridBits)
-            df.withColumn("zb", zb)
-              .repartition(col("zb")) // one writer (→ one file) per cell
-              .write.mode("overwrite").partitionBy("zb").parquet(path)
-            java.nio.file.Files.writeString(
-              p.resolveSibling(p.getFileName.toString + "._zbounds"),
-              s"$xLo $xHi $yLo $yHi")
-          }
-        } finally df.unpersist()
-        storeWritten += path
-      }
+    val bounds = boundsFile(path)
+    graft.Aux.writeFrameOnce(df, path,
+        java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")) &&
+          java.nio.file.Files.exists(bounds), salt = s"-g$gridBits") { df =>
+      val (xLo, xHi, yLo, yHi) = boundsOf(df, xCol, yCol)
+      require(xHi > xLo && yHi > yLo,
+        s"ZOrder.store needs spread on both dims ($xCol: [$xLo,$xHi], " +
+          s"$yCol: [$yLo,$yHi]) — a constant dim quantizes to NULL cells")
+      val cells = 1 << gridBits
+      val zb = morton(cellOf(col(xCol), xLo, xHi, cells),
+        cellOf(col(yCol), yLo, yHi, cells), gridBits)
+      df.withColumn("zb", zb)
+        .repartition(col("zb")) // one writer (→ one file) per cell
+        .write.mode("overwrite").partitionBy("zb").parquet(path)
+      java.nio.file.Files.writeString(bounds, s"$xLo $xHi $yLo $yHi")
     }
     path
   }
@@ -114,10 +101,8 @@ object ZOrder {
   def boxQuery(spark: SparkSession, path: String, gridBits: Int,
                xCol: String, xLo: Double, xHi: Double,
                yCol: String, yLo: Double, yHi: Double): DataFrame = {
-    val p = java.nio.file.Paths.get(path)
     val Array(bxLo, bxHi, byLo, byHi) = java.nio.file.Files
-      .readString(p.resolveSibling(p.getFileName.toString + "._zbounds"))
-      .trim.split(" ").map(_.toDouble)
+      .readString(boundsFile(path)).trim.split(" ").map(_.toDouble)
     val cells = 1 << gridBits
     def cellIdx(v: Double, lo: Double, hi: Double): Long =
       math.min(cells - 1L, math.max(0L,

@@ -76,8 +76,13 @@ object FederationQueries {
         .map(r => Map[String, Any](
           "n_nationkey" -> r.getInt(0), "n_name" -> r.getString(1),
           "n_regionkey" -> r.getInt(2)))
-      graft.sources.PagedJsonClient.writeJsonl(
-        rows.toIndexedSeq, Seq("n_nationkey", "n_name", "n_regionkey"), db)
+      // through the write-once store, like every other file under the
+      // aux dir: a current file is not rewritten under a reader
+      graft.Aux.writeOnce(db, scala.util.hashing.MurmurHash3.seqHash(rows.toSeq).toString,
+          java.nio.file.Files.exists(java.nio.file.Paths.get(db))) {
+        graft.sources.PagedJsonClient.writeJsonl(
+          rows.toIndexedSeq, Seq("n_nationkey", "n_name", "n_regionkey"), db)
+      }
       s.read.format("graft.sources.PagedJsonSource")
         .option("path", db)
         .option("schemaDDL", "n_nationkey INT, n_name STRING, n_regionkey INT")

@@ -124,50 +124,30 @@ object MofFixtures {
       scala.util.hashing.MurmurHash3.orderedHash(nestedDocs.map(_.toString)).toString
 
   /** Shred the fixture corpus and materialize the star tables as
-    * single-file parquet — but only when the on-disk star does not
-    * already carry the current corpus' content stamp. The write-once
-    * discipline matters beyond speed: the star dir is sf-independent and
-    * shared by every session (Verify, Bench, the driver's DuckDB oracle
-    * all read the same files), so an unconditional per-session overwrite
-    * opens a window where a concurrently running job reads a
-    * half-rewritten table — the only mechanism ever observed producing a
-    * rows-match/hash-mismatch flake on q47 (CORRECTNESS_r03). With the
-    * stamp, re-running unchanged code never touches the files; a fixture
-    * edit changes the stamp and triggers exactly one rewrite. */
-  def registerStar(spark: SparkSession): Unit = synchronized {
+    * single-file parquet through the write-once store
+    * [[graft.Aux.writeOnce]], stamped by [[fixtureVersion]]. The
+    * write-once discipline matters beyond speed: the star dir is
+    * sf-independent and shared by every session (Verify, Bench, the
+    * driver's DuckDB oracle all read the same files), so an
+    * unconditional per-session overwrite opens a window where a
+    * concurrently running job reads a half-rewritten table — the only
+    * mechanism ever observed producing a rows-match/hash-mismatch flake
+    * on q47 (CORRECTNESS_r03). Re-running unchanged code never touches
+    * the files; a fixture edit changes the stamp and triggers exactly
+    * one rewrite. */
+  def registerStar(spark: SparkSession): Unit =
     if (!spark.catalog.tableExists("mofs")) {
-      val versionFile = java.nio.file.Paths.get(StarDir, "_fixture_version")
-      val want = fixtureVersion
-      def upToDate = java.nio.file.Files.exists(versionFile) &&
-        java.nio.file.Files.readString(versionFile).trim == want &&
-        StarTables.forall(t => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(StarDir, t, "_SUCCESS")))
-      if (!upToDate) {
-        // Cross-JVM file lock: on a cold start (no stamp yet) two
-        // concurrently launched sessions (Verify ∥ Bench) must not both
-        // rewrite the shared star; the second waits, re-checks the stamp
-        // under the lock, and skips.
-        java.nio.file.Files.createDirectories(versionFile.getParent)
-        val ch = java.nio.channels.FileChannel.open(
-          java.nio.file.Paths.get(StarDir, "_lock"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        val lock = ch.lock()
-        try {
-          if (!upToDate) {
-            val shredded = MofSchema.shred(nested(spark))
-            require(shredded.keySet == StarTables.toSet,
-              s"StarTables out of sync with shred output: ${shredded.keySet}")
-            shredded.foreach { case (name, df) =>
-              df.coalesce(1).write.mode("overwrite").parquet(s"$StarDir/$name")
-            }
-            java.nio.file.Files.writeString(versionFile, want)
-          }
-        } finally { lock.release(); ch.close() }
+      graft.Aux.writeOnce(StarDir, fixtureVersion, StarTables.forall(t =>
+          java.nio.file.Files.exists(java.nio.file.Paths.get(StarDir, t, "_SUCCESS")))) {
+        val shredded = MofSchema.shred(nested(spark))
+        require(shredded.keySet == StarTables.toSet,
+          s"StarTables out of sync with shred output: ${shredded.keySet}")
+        shredded.foreach { case (name, df) =>
+          df.coalesce(1).write.mode("overwrite").parquet(s"$StarDir/$name")
+        }
       }
       StarTables.foreach { name =>
         spark.read.parquet(s"$StarDir/$name").createOrReplaceTempView(name)
       }
     }
-  }
 }

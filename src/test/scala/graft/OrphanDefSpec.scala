@@ -18,10 +18,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * registered function does. Only members at object level (indent ≤ 4)
   * are checked; `private`, `protected` and `override` defs are skipped.
   *
-  * The match is by NAME, not by symbol: an overload, or a same-named def
-  * in another object, counts as a reference and can hide an orphan (two
-  * `estimate`s or two `registerAll`s keep each other alive). The guard
-  * catches the common case cheaply; it is not a call graph.
+  * The match is by NAME, not by symbol. A name declared once counts as
+  * used when it occurs anywhere beyond its declaration. A name declared
+  * more than once (in any scanned or caller file) would keep each
+  * same-named def alive, so such a def counts as used only when a caller
+  * writes it as `Owner.name` (its enclosing object, class or trait) or
+  * its own file uses the bare name beyond its declarations. An
+  * overload in the same object, or an imported bare call from another
+  * file, is therefore seen only through `Owner.name`. The guard catches
+  * the common case cheaply; it is not a call graph.
   */
 class OrphanDefSpec extends AnyFunSuite {
 
@@ -98,6 +103,31 @@ class OrphanDefSpec extends AnyFunSuite {
     val all = orphans(scanned ++ src, callerSources.values.toSeq :+ planted)
     assert(all.keySet.contains("plantedOrphan"))
   }
+
+  test("a def named twice counts only calls through its owner or in its own file") {
+    val a =
+      """package graft.operators
+        |object Alpha {
+        |  def twice(x: Int): Int = x
+        |  def local(x: Int): Int = x
+        |  def viaLocal: Int = local(1)
+        |}
+        |""".stripMargin
+    val b =
+      """package graft.functions
+        |object Beta {
+        |  def twice(x: Int): Int = x
+        |  def local(x: Int): Int = x
+        |}
+        |""".stripMargin
+    val caller = "object Caller { val y = Alpha.twice(1) + Alpha.viaLocal }"
+    val src = Map("src/main/scala/graft/operators/Alpha.scala" -> a,
+      "src/main/scala/graft/functions/Beta.scala" -> b)
+    // Beta.twice is kept alive by name only (Alpha.twice is the call);
+    // Beta.local likewise (Alpha's own file calls its own local)
+    assert(orphans(src, Seq(a, b, caller)).keySet == Set("twice", "local"))
+    assert(orphans(src, Seq(a, b, caller)).values.toSet == Set("src/main/scala/graft/functions/Beta.scala"))
+  }
 }
 
 object OrphanDefSpec {
@@ -116,7 +146,8 @@ object OrphanDefSpec {
     "spgFilterMap" -> "optimade_database/Optimade_Server/utils.py:550-573",
     "bandgapFilterMap" -> "optimade_database/Optimade_Server/utils.py:585-613",
     "run_id" -> "optimade_database/Optimade_Server/server.py:137",
-    "eAboveHull" -> "openlam_database/openlam/lam_optimize/utils.py:139-190")
+    "eAboveHull" -> "openlam_database/openlam/lam_optimize/utils.py:139-190",
+    "eFormPerAtom" -> "openlam_database/openlam/lam_optimize/utils.py:107-115")
 
   private val Citation = """[\w./-]+\.\w+:\d+(-\d+)?""".r
 
@@ -127,17 +158,39 @@ object OrphanDefSpec {
   private val PublicDef =
     """(?m)^([ \t]*)((?:[a-z]+(?:\[\w+\])?[ \t]+)*)def[ \t]+([A-Za-z_][A-Za-z0-9_]*)""".r
 
+  private val OwnerDecl =
+    """(?m)^([ \t]*)(?:[a-z]+(?:\[\w+\])?[ \t]+)*(?:object|class|trait)[ \t]+([A-Za-z_][A-Za-z0-9_]*)""".r
+
+  private def counts(names: Iterator[String]): Map[String, Int] =
+    names.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+
   /** Name → defining file of every public object-level def in `defFiles`
-    * whose name occurs in `callers` no more often than it is defined. */
+    * that has no use by the rule in the scaladoc above. */
   def orphans(defFiles: Map[String, String], callers: Seq[String]): Map[String, String] = {
     val code = callers.map(stripComments)
-    val uses = code.flatMap(c => Ident.findAllIn(c)).groupBy(identity).map { case (k, v) => k -> v.size }
-    val decls = code.flatMap(c => PublicDef.findAllMatchIn(c).map(_.group(3)))
-      .groupBy(identity).map { case (k, v) => k -> v.size }
+    val uses = counts(code.iterator.flatMap(c => Ident.findAllIn(c)))
+    val decls = counts(code.iterator.flatMap(c => PublicDef.findAllMatchIn(c).map(_.group(3))))
     defFiles.toSeq.flatMap { case (file, src) =>
-      PublicDef.findAllMatchIn(stripComments(src)).collect {
-        case m if m.group(1).length <= 4 && Hidden.findFirstIn(m.group(2)).isEmpty &&
-            uses.getOrElse(m.group(3), 0) <= decls.getOrElse(m.group(3), 0) =>
+      val own = stripComments(src)
+      val owners = OwnerDecl.findAllMatchIn(own).toSeq
+      def used(m: scala.util.matching.Regex.Match): Boolean = {
+        val name = m.group(3)
+        val declared = decls.getOrElse(name, 0) max 1
+        if (declared == 1) uses.getOrElse(name, 0) > declared
+        else {
+          val owner = owners.filter(o => o.start < m.start && o.group(1).length < m.group(1).length)
+            .lastOption.map(_.group(2))
+          val qualified = owner.exists { o =>
+            val call = s"\\b$o\\s*\\.\\s*$name\\b".r
+            code.exists(c => call.findFirstIn(c).isDefined)
+          }
+          val ownUses = counts(Ident.findAllIn(own)).getOrElse(name, 0)
+          val ownDecls = ("""\bdef\s+""" + name + """\b""").r.findAllIn(own).size
+          qualified || ownUses > ownDecls
+        }
+      }
+      PublicDef.findAllMatchIn(own).collect {
+        case m if m.group(1).length <= 4 && Hidden.findFirstIn(m.group(2)).isEmpty && !used(m) =>
           m.group(3) -> file
       }
     }.toMap

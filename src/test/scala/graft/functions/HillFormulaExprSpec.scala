@@ -30,12 +30,4 @@ class HillFormulaExprSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project"), plan)
     assert(df.collect().map(_.getString(0)).toSeq == Seq("O2Ti", "O3Ti"))
   }
-
-  test("SQL registration: hill_formula callable from spark.sql") {
-    GraftFunctions.registerAll(spark)
-    val r = spark.sql(
-      "SELECT hill_formula('NaCl') AS a, hill_formula('ZrO') AS b, hill_formula('!!') AS c")
-      .collect().head
-    assert(r.getString(0) == "ClNa" && r.getString(1) == "OZr" && r.isNullAt(2))
-  }
 }

@@ -40,4 +40,20 @@ class BucketedSpec extends AnyFunSuite {
     assert(t3 != t1) // different content → different table, no rewrite race
     assert(spark.table(t1).count() == 100L && spark.table(t3).count() == 99L)
   }
+
+  test("table: a fresh session over a warm directory re-registers it, no rewrite") {
+    import spark.implicits._
+    val df = (1L to 60L).map(i => (i % 5, i)).toDF("k", "v")
+    val t = Bucketed.table(df, "spec_warm", "k", 4)
+    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
+    val dir = java.nio.file.Paths.get(wh, t)
+    val success = dir.resolve("_SUCCESS")
+    val old = java.nio.file.attribute.FileTime.fromMillis(1000000L)
+    java.nio.file.Files.setLastModifiedTime(success, old)
+    spark.sql(s"DROP TABLE $t") // external: the directory stays
+    graft.Aux.forget(dir.toString) // what a fresh JVM sees
+    assert(Bucketed.table(df, "spec_warm", "k", 4) == t)
+    assert(java.nio.file.Files.getLastModifiedTime(success) == old)
+    assert(spark.table(t).count() == 60L)
+  }
 }

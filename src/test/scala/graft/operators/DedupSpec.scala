@@ -227,19 +227,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("connected components: skewSafeMinima=true (groupBy+join-back shape) matches union-find") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(0xCD)
-    val pairs = Seq.fill(60) {
-      val a = rnd.nextInt(40).toLong; val b = rnd.nextInt(40).toLong
-      if (a == b) (a, b + 40L) else (math.min(a, b), math.max(a, b))
-    }.distinct
-    val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"),
-        skewSafeMinima = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == ufComponents(pairs))
-  }
-
   test("connected components: a 120-node path converges within default maxIter") {
     // label shortcutting (comp ← comp(comp)) must collapse a
     // diameter-119 path in far fewer than 119 rounds: plain min-label

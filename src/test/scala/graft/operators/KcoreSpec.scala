@@ -54,17 +54,6 @@ class KcoreSpec extends AnyFunSuite {
     }
   }
 
-  test("skewSafeDegrees=true (groupBy+join-back shape) matches the peel") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(53)
-    val pairs = Seq.fill(120)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-      .filter(p => p._1 != p._2)
-    val got = Kcore.kcore(sym(pairs).toDF("src", "dst"), 3,
-        skewSafeDegrees = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === brute(pairs, 3))
-  }
-
   test("maxRounds breach raises instead of returning a non-fixpoint") {
     // a 12-node path at k=2 peels one layer per round from the ends
     // (internal degrees are 2): depth ≈ n/2 rounds, so maxRounds=2

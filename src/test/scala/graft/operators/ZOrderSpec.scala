@@ -64,7 +64,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("store is write-once per session and content-stamped on disk") {
     val p = java.nio.file.Paths.get(path)
-    val stamp = p.resolveSibling(p.getFileName.toString + "._zversion")
+    val stamp = p.resolveSibling(p.getFileName.toString + "._stamp")
     assert(Files.exists(stamp))
     val before = Files.getLastModifiedTime(stamp)
     ZOrder.store(df, "x", "y", GridBits, path) // second call: no rewrite
