@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -11,11 +13,44 @@ package graft
   * windows pollute adjacent wall-clock — interleaving decorrelates a
   * query's samples from any one window) and "value" is the sum of
   * medians. AQE is on; shuffle partitions match the local core count.
+  *
+  * Each query's `bench-detail` line gives, per pass, its seconds and its
+  * [[Tally]]. A query that memoizes a stage (`Aux.share*`) builds it in
+  * pass 1 and only reads it back later (q112: 46 jobs, then 3 at
+  * sf0.01), so read such an operator from pass 1 of an empty aux root.
+  * Verify, Explain and BenchScale share this harness: [[session]],
+  * [[picked]] and [[median]].
   */
 object Bench {
+
+  /** Cores of every main's session: SPARK_GRAFT_CPUS, default 4. */
+  private[graft] val cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** [[LocalSession]] at [[cores]], logging at WARN. The per-query
+    * [[Caches.releaseAll]] sweep WARNs once per localCheckpointed RDD —
+    * expected, and noisy enough to crowd the 2000-char tail that is
+    * JSON-parsed (tools/check_bench_tail.py) — so the
+    * org.apache.spark.rdd logger is at ERROR. */
+  private[graft] def session(): SparkSession = {
+    val spark = LocalSession(cores)
+    spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+
+  /** Dev-only subset filter: SPARK_GRAFT_ONLY=q97,q08 (name prefixes)
+    * runs only the queries it names; gate runs leave it unset. */
+  private[graft] def picked(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY").forall(_.split(",").exists(p => name.startsWith(p.trim)))
+
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // 5 runs (was 3): per-run timings show heavy-tailed multi-second
     // outliers — NOT GC (zero full collections, ≤15 ms pauses in the
     // -Xlog:gc trace), time-clustered across adjacent queries and able
@@ -24,24 +59,12 @@ object Bench {
     // two polluted runs; a median of 3 tolerates one. This is the same
     // signature as the r05 gate's contiguous q57–q68 cluster.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val spark = LocalSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    // The per-query RDD sweep below WARNs once per localCheckpointed
-    // RDD ("lineage has been truncated...cannot be recomputed") —
-    // expected (nothing reuses a completed query's round states) and
-    // noisy enough to crowd the tail window the driver JSON-parses.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = session()
 
     // warmup: session + codegen + footer reads for the big tables
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Seq("lineitem", "orders").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").limit(1).collect()
-    }
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
 
     // PASS-INTERLEAVED runs: all queries once per pass, `runs` passes,
@@ -53,12 +76,7 @@ object Bench {
     // repairs. Interleaving puts ~minutes between a query's samples, so
     // one stall window touches at most one sample of each affected
     // query and the median discards it.
-    // Dev-only subset filter (comma-separated name prefixes), e.g.
-    // SPARK_GRAFT_BENCH_ONLY=q97,q08 — the driver never sets it, so
-    // gate runs always time the full set.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.split(",").exists(n.startsWith)) }
+    val named = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => picked(n) }
     // Per-pass peak of the block-manager storage pool, to separate
     // "host weather" from "cache pressure" in slow passes (VERDICT r8:
     // ~35 persist() sites with 2 unpersists meant every cached plan of
@@ -69,13 +87,18 @@ object Bench {
     // triage signal, not a bound; a timer-thread sampler is the upgrade
     // if precision ever matters (ADVICE r9).
     val passPeakStorage = scala.collection.mutable.ArrayBuffer[Long]()
-    val samples: Seq[Seq[Double]] = (1 to runs).map { _ =>
+    val samples: Seq[Seq[(Double, Tally)]] = (1 to runs).map { _ =>
       var peak = 0L
-      val pass = named.map { case (_, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        val sec = (System.nanoTime() - t0) / 1e9
+      val pass = named.map { case (name, fn) =>
+        // -1 marks a failed query; its tally still counts what it ran
+        val sample = Tally.of(spark) {
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            -1.0
+          }
+        }
         peak = math.max(peak, Caches.storageBytes(spark))
         // Cache hygiene: drop query-scoped persists so pass n+1 times
         // the same cold-cache work as pass 1 and the storage pool stays
@@ -85,7 +108,7 @@ object Bench {
         // Aux.share/shareBuilt stages are parquet-backed (Aux.writeOnce)
         // and unaffected.
         Caches.releaseAll(spark)
-        if (ok) sec else -1.0
+        sample
       }
       passPeakStorage += peak
       pass
@@ -95,8 +118,11 @@ object Bench {
     // output, so nothing may be emitted after the JSON.
     val detail = new StringBuilder
     val results = named.zipWithIndex.map { case ((name, _), i) =>
-      val times = samples.map(_(i))
-      detail.append(f"bench-detail $name%-28s ${times.map(t => f"$t%.3f").mkString(" ")}%n")
+      val times = samples.map(_(i)._1)
+      def perPass(field: Tally => Long): String = samples.map(p => field(p(i)._2)).mkString("/")
+      detail.append(f"bench-detail $name%-28s ${times.map(t => f"$t%.3f").mkString(" ")}  " +
+        s"jobs=${perPass(_.jobs)} stages=${perPass(_.stages)} tasks=${perPass(_.tasks)} " +
+        f"task_ms=${perPass(_.taskMs)} cpu_ms=${perPass(_.cpuMs)} gc_ms=${perPass(_.gcMs)}%n")
       name -> (if (times.exists(_ < 0)) -1.0 else median(times))
     }
     // r05 gate showed a q57-q68 late-run slowdown cluster with medians

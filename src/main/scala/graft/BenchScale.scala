@@ -34,11 +34,15 @@ import graft.operators.{Apportion, AsofJoin, Bars, Bfs, BloomJoin, Bpe,
   * 1 (superlinear) is the failure signal. Prints one JSON line per
   * family plus a summary; exits nonzero if any family exceeds
   * ALPHA_MAX (default 1.35).
+  *
+  * The session has SPARK_GRAFT_CPUS cores, default 4 like every main
+  * ([[Bench.session]]); the r11–r13 runs in BASELINE.md used
+  * SPARK_GRAFT_CPUS=32, so pass 32 to reproduce them.
   */
 object BenchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Bench.cores
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,4,16")
       .split(",").map(_.trim.toInt).toSeq
@@ -48,8 +52,7 @@ object BenchScale {
     // bare dir-exists (a killed run leaves a partial dir behind)
     val scratch = s"/tmp/graft_scale/${new java.io.File(sfDir).getName}"
 
-    val spark = LocalSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     // ---- synthesize the k× fixtures (materialized so timings measure
     // scan→operator, not the union-generation DAG) ----
@@ -89,10 +92,6 @@ object BenchScale {
       }
     }
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     def time(body: => Long): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
@@ -1243,7 +1242,7 @@ object BenchScale {
     // SPARK_GRAFT_PARTS_PER_K=p: scale shuffle partitions WITH the data
     // (max(cpus, p·k) for the k× fixture) instead of the harness's fixed
     // `cpus`. This is the knob a real cluster turns (AQE's
-    // initialPartitionNum / dynamic allocation) — the fixed-32 default
+    // initialPartitionNum / dynamic allocation) — fixed 32 (r11–r13)
     // deliberately measures the SMALL-cluster worst case, which makes
     // the top decade of the shuffle-heaviest families spill (r11: ~15M
     // rows/partition at k64). The round-12 decade re-runs record alpha
@@ -1261,7 +1260,7 @@ object BenchScale {
           spark.conf.set("spark.sql.shuffle.partitions",
             math.max(cpus, p * k).toString)
         }
-        k -> median((1 to runs).map { _ =>
+        k -> Bench.median((1 to runs).map { _ =>
           val t = time(fn(k)); Caches.releaseAll(spark); t
         })
       }

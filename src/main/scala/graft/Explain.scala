@@ -12,7 +12,7 @@ object Explain {
       else Seq("q01_agg_pricing", "q07_join_chain5", "q08_join_self",
         "q14_sort_topk", "q17_pred_range", "q25_optimade_part",
         "q37_dedup_minhash", "q39_embed_topk", "q44_events_window")
-    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n=================== $n ===================")

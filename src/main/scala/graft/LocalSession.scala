@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session every main runs under, so the plans Explain prints and
-  * Profile measures are the plans Bench times and Verify checks:
+/** The session every main runs under (through [[Bench.session]]), so the
+  * plans Explain prints are the plans Bench times and Verify checks:
   * `local[cores]` with one shuffle partition per core, AQE and its
   * partition coalescing on, UTC and no UI.
   */

@@ -11,7 +11,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def allDefs: Seq[QueryDef] =
+  private[graft] def allDefs: Seq[QueryDef] =
     RelationalQueries.defs ++ FunctionQueries.defs ++ OptimadeQueries.defs ++
       SqlSurfaceQueries.defs ++ FederationQueries.defs ++ PipelineQueries.defs ++
       EventQueries.defs ++ MofScenarioQueries.defs ++ CorpusQueries.defs

@@ -7,23 +7,14 @@ import graft.result.Json
   * (tools/check_oracle.py). A query's output directory is removed
   * before it runs, so a query that throws leaves no result from an
   * earlier run behind, and the run exits 1 naming every query that
-  * threw. */
+  * threw. SPARK_GRAFT_ONLY limits the dump to a subset ([[Bench.picked]]);
+  * check_oracle.py works on such a dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    // expected unpersist-of-localCheckpoint WARNs from the per-query
-    // RDD sweep (see Bench) — silence the rdd logger only
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    // dev-only prefix filter (SPARK_GRAFT_VERIFY_ONLY=q224,q225) for
-    // single-query iteration — the round driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val picked = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val picked = SparkEntry.queries.filter { case (n, _) => Bench.picked(n) }
     val failed = Seq.newBuilder[String]
     picked.foreach { case (name, fn) =>
       try {
@@ -43,7 +34,7 @@ object Verify {
       Caches.releaseAll(spark)
     }
     val json = SparkEntry.oracleSqlFor(sfDir)
-      .filter { case (k, _) => only.forall(_.exists(k.startsWith)) }
+      .filter { case (k, _) => Bench.picked(k) }
       // Json.str escapes ALL control chars (<0x20): a tab or CR in an
       // oracle's SQL would otherwise make oracle_sql.json unparseable.
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")

@@ -53,7 +53,7 @@ object Kcore {
         .filter(col("src") =!= col("dst"))
         .distinct())
     var prev = -1L
-    var m = e.count()
+    var m = e.rdd.count()
     var rounds = 0
     while (m != prev && m > 0) {
       prev = m
@@ -64,7 +64,7 @@ object Kcore {
         survivors
           .filter(col("_ds") >= k && col("_dd") >= k)
           .select("src", "dst"))
-      m = e.count()
+      m = e.rdd.count()
       if (m != prev) {
         // only iterations that actually peeled count toward the bound
         // (the final fixpoint-detection pass is free of charge, like

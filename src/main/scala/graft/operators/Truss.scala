@@ -55,7 +55,7 @@ object Truss {
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
       result = Iterate.materialize(
         sup.filter(col("support") >= (k - 2).toLong))
-      val m = result.count()
+      val m = result.rdd.count()
       // survivors shrink monotonically, so equal cardinality means the
       // SAME edge set — and support was computed on exactly that set
       if (m == prev || m == 0) converged = true

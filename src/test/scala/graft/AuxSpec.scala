@@ -77,21 +77,7 @@ class AuxSpec extends AnyFunSuite with BeforeAndAfterAll {
     files(root).forall(Files.getLastModifiedTime(_) == Old)
 
   /** The number of Spark jobs started while `f` ran. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      f
-      org.apache.spark.ListenerBusDrain(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(f: => Unit): Int = Tally.of(spark)(f)._2.jobs
 
   test("writeOnce skips the write when the stamp already matches") {
     val root = base.resolve("plain").toString

@@ -17,13 +17,9 @@ class SparkEntrySpec extends AnyFunSuite {
 
   test("query names are unique and oracle keys all resolve") {
     val names = SparkEntry.queries.keys.toSeq
-    // Map construction dedupes silently — catch collisions at the source
-    val defs = Seq(
-      queries.RelationalQueries.defs, queries.FunctionQueries.defs,
-      queries.OptimadeQueries.defs, queries.SqlSurfaceQueries.defs,
-      queries.FederationQueries.defs, queries.PipelineQueries.defs,
-      queries.EventQueries.defs, queries.MofScenarioQueries.defs,
-      queries.CorpusQueries.defs).flatten
+    // Map construction dedupes silently — catch collisions over the
+    // very list `queries` maps
+    val defs = SparkEntry.allDefs
     assert(defs.map(_.name).distinct.size == defs.size,
       s"duplicate query names: ${defs.map(_.name).diff(defs.map(_.name).distinct)}")
     assert(names.size == defs.size)

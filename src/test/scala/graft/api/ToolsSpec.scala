@@ -96,19 +96,8 @@ class ToolsSpec extends AnyFunSuite {
 
   /** `f`'s result and the number of Spark jobs started while it ran. */
   private def jobsDuring[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = f
-      org.apache.spark.ListenerBusDrain(sc)
-      (a, jobs.get())
-    } finally sc.removeSparkListener(listener)
+    val (a, tally) = graft.Tally.of(spark)(f)
+    (a, tally.jobs)
   }
 
   test("writing files does not run the tool's query a second time") {
